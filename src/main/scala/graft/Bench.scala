@@ -11,22 +11,21 @@ import org.apache.spark.sql.SparkSession
   * lets Catalyst prune them).
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
+  /** The queries, fixture and session a run covers; [[Profile]] shares it
+    * so both mains read the same arguments and environment. */
+  private[graft] def setup(
+      args: Array[String]): (Seq[String], String, SparkSession) = {
     // Optional args: bench only the named queries (local iteration); the
     // driver invokes with no args → full registered set.
     val selected: Seq[String] =
       if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    (selected, sfDir, Session.local(cpus))
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (selected, sfDir, spark) = setup(args)
     def run(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()

@@ -9,7 +9,6 @@ package graft
 // stores are one-file-per-bucket.
 object DiagStreamLat {
   def main(args: Array[String]): Unit = {
-    import org.apache.spark.sql.SparkSession
     import org.apache.spark.sql.functions._
     import graft.operators.{BandStore, BoilerStore, IncrementalDedup, SubstringStore}
     import graft.streaming.{AdmissionStream, ContamStream, CurationGateStream}
@@ -17,12 +16,7 @@ object DiagStreamLat {
     import graft.functions.TextFunctions
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val par = spark.sparkContext.defaultParallelism
     val slug = sfDir.replaceAll("[^A-Za-z0-9]", "_")

@@ -52,7 +52,7 @@ object Salting {
     * salt). Cost: small-side volume × buckets — the right trade whenever
     * the small side is dimension-sized.
     *
-    * When to reach for this — MEASURED (ProfileQ63, sf0.1, local[32],
+    * When to reach for this — MEASURED (sf0.1, local[32],
     * BENCH_NOTES_r09): a broadcastable dim makes salting strictly
     * overhead (plain AQE join 0.74 s vs salted 0.95 s); with broadcast
     * forbidden, plain SMJ + AQE still wins (0.84 vs 0.90 s) even though

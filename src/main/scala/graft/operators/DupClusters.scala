@@ -254,8 +254,7 @@ object DupClusters {
     */
   /** q45's derived corpus (every 10th doc + two appended-tail variants)
     * with distinct 3-shingles, spread across cores and PERSISTED — the
-    * caller must unpersist. Shared with [[graft.Profile45]] so the
-    * profiler measures exactly the registered pipeline's stages. */
+    * caller must unpersist. */
   private[graft] def q45ShingleTable(spark: SparkSession, dir: String): DataFrame = {
     val base = spark.read.parquet(s"$dir/documents.parquet")
       .where(col("doc_id") % 10 === 0)
@@ -318,8 +317,7 @@ object DupClusters {
 
   /** Exact-Jaccard-verified similarity edges over a (id, sh) shingle
     * table: prefix-filtered candidates (recall-complete at `threshold`),
-    * then the threshold verify ([[jaccardScored]]'s relational form).
-    * Shared with [[graft.Profile45]]. */
+    * then the threshold verify ([[jaccardScored]]'s relational form). */
   private[graft] def jaccardEdges(withShingles: DataFrame,
                                   threshold: Double): DataFrame =
     jaccardScored(withShingles, threshold).select("a", "b")

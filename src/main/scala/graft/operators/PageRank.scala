@@ -41,28 +41,15 @@ object PageRank {
     * a stable partitioning across rounds so only the skinny rank vector
     * actually moves. */
   def pageRank(edges: DataFrame, iters: Int,
-               broadcastRanks: Boolean = true): DataFrame =
-    pageRankImpl(edges, iters, broadcastRanks, materialize = true)
-
-  /** The lazy pipeline without persist/checkpoint — for plan audits
-    * ([[graft.Explain]]): the registered entry's executed plan truncates
-    * at its eager localCheckpoint. */
-  private[graft] def pageRankPlanOnly(edges: DataFrame, iters: Int): DataFrame =
-    pageRankImpl(edges, iters, broadcastRanks = true, materialize = false)
-
-  private def pageRankImpl(edges: DataFrame, iters: Int,
-                           broadcastRanks: Boolean,
-                           materialize: Boolean): DataFrame = {
-    val edgesW = // reused every round
-      if (materialize) edges.persist(StorageLevel.MEMORY_AND_DISK) else edges
+               broadcastRanks: Boolean = true): DataFrame = {
+    // reused every round
+    val edgesW = edges.persist(StorageLevel.MEMORY_AND_DISK)
     // outdeg doubles as the node set: one row per src = one per node
     // (every node appears as a src by contract) — no separate distinct
     // pass over the edges, and n_out rides along to the output for free
-    val nodes0 = edgesW.groupBy(col("src").as("node"))
+    val nodes = edgesW.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("n_out"))
-    val nodes =
-      if (materialize) nodes0.persist(StorageLevel.MEMORY_AND_DISK)
-      else nodes0
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val nn = nodes.agg(count(lit(1)).as("n"))
     val r0 = nodes.crossJoin(broadcast(nn))
       .select(col("node"), col("n_out"), col("n"),
@@ -85,13 +72,10 @@ object PageRank {
     // inputs can be unpersisted HERE (the q44 lesson: CacheManager pins
     // persist() entries strongly, so a lazy plan over them would retain
     // the edge table for the JVM's lifetime).
-    val lazyOut = rFinal.select(col("node"), col("r"), col("n_out"))
-    if (!materialize) lazyOut
-    else {
-      val out = lazyOut.localCheckpoint(true)
-      edgesW.unpersist(); nodes.unpersist()
-      out
-    }
+    val out = rFinal.select(col("node"), col("r"), col("n_out"))
+      .localCheckpoint(true)
+    edgesW.unpersist(); nodes.unpersist()
+    out
   }
 
   /** DuckDB replay of [[pageRank]] as unrolled CTEs. `edgesSelect` must
@@ -133,7 +117,7 @@ object PageRank {
     * supplier–customer pairs from lineitem⋈orders, symmetrized so every
     * node has out-edges): the 20 most central trade participants after 3
     * rounds. */
-  private[graft] def q80Edges(spark: SparkSession, dir: String): DataFrame = {
+  private def q80Edges(spark: SparkSession, dir: String): DataFrame = {
     val lo = Kpis.table(spark, dir, "lineitem")
       .select("l_orderkey", "l_suppkey")
       .join(Kpis.table(spark, dir, "orders")

@@ -2,16 +2,10 @@ package graft.plans
 
 import org.apache.spark.sql.DataFrame
 
-/** Eager `localCheckpoint(true)` with a plan-audit escape hatch: the
-  * store-backed queries checkpoint their output so persisted inputs can
-  * release (the q98 convention), but an eager checkpoint collapses the
-  * physical plan to a `Scan ExistingRDD` — which makes the watched-plan
-  * artifacts (`artifacts/explain_r*_watched.txt`) unreadable for exactly
-  * the plans the audits most need. `graft.ExplainDump` flips `enabled`
-  * off so it can print the REAL pre-checkpoint plan; every execution
-  * path keeps the eager checkpoint. */
+/** Eager `localCheckpoint(true)`: the store-backed queries checkpoint
+  * their output so persisted inputs can release (the q98 convention).
+  * [[graft.Profile]] records the pre-checkpoint plan of each such action,
+  * with the query line that called it as its call site. */
 object Eager {
-  @volatile private[graft] var enabled = true
-  def ckpt(df: DataFrame): DataFrame =
-    if (enabled) df.localCheckpoint(true) else df
+  def ckpt(df: DataFrame): DataFrame = df.localCheckpoint(true)
 }

@@ -329,7 +329,7 @@ object CurationPipeline {
   /** q350-family K-shingle position rows (doc_id, p, fp) of a `toks`
     * frame — ONE spelling shared by the v2/v3 self-repetition gates,
     * substring rewrites, and contamination probes. */
-  private[graft] def positionsOf(df: DataFrame): DataFrame = {
+  private def positionsOf(df: DataFrame): DataFrame = {
     import graft.queries.SubstringQueries.K
     df.filter(size(col("toks")) >= K)
       .select(col("doc_id"),

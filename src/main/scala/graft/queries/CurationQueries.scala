@@ -43,11 +43,9 @@ object CurationQueries {
     */
   /** q55's derived corpus (full docs ∪ 12-token prefix excerpts of every
     * 10th doc) with distinct 3-shingles, spread across cores and
-    * PERSISTED — the caller must unpersist. Shared with
-    * [[graft.ProfileQ55]] so the profiler measures exactly the
-    * registered pipeline's stages. */
-  private[graft] def q55ShingleTable(spark: SparkSession,
-                                     dir: String): DataFrame = {
+    * PERSISTED — the caller must unpersist. */
+  private def q55ShingleTable(spark: SparkSession,
+                              dir: String): DataFrame = {
     val par = spark.sparkContext.defaultParallelism
     val base = Kpis.table(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
@@ -70,8 +68,8 @@ object CurationQueries {
   /** Candidate containment verification: fetch both shingle sets per
     * candidate pair, count the exact intersection, keep containment
     * ≥ `threshold`. */
-  private[graft] def q55Verify(shs: DataFrame, cand: DataFrame,
-                               threshold: Double): DataFrame = {
+  private def q55Verify(shs: DataFrame, cand: DataFrame,
+                        threshold: Double): DataFrame = {
     val sa = shs.select(col("id").as("a"), col("sh").as("sha"))
     val sb = shs.select(col("id").as("b"), col("sh").as("shb"))
     cand.join(sa, "a").join(sb, "b")

@@ -59,7 +59,6 @@ object RetrievalQueries {
     * (doc_id, toks) frame. Start positions 0, S, 2S, … < n; a non-initial
     * window is kept only when ≥ MinTail tokens remain. Pure array ops —
     * no shuffle. */
-  private[graft] def chunkedPub(toksDf: DataFrame): DataFrame = chunked(toksDf)
   private def chunked(toksDf: DataFrame): DataFrame = {
     val starts = filter(
       sequence(lit(0), size(col("toks")) - 1, lit(S)),

@@ -605,21 +605,10 @@ object ShardQueries {
     // each pass's range shuffle + eager checkpoint leaves cores idle in
     // its task tail that the other pass's jobs back-fill. Same jobs,
     // just concurrent ⇒ byte-identical results.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    val (fpPart, fpArr) =
-      try {
-        val fArr = pool.submit(
-          new java.util.concurrent.Callable[DataFrame] {
-            def call(): DataFrame = filesOf("2_arrival",
-              Seq(col("l_orderkey"), col("l_linenumber")))
-          })
-        val byPart = filesOf("1_by_part",
-          Seq(col("p"), col("l_orderkey"), col("l_linenumber")))
-        (byPart, fArr.get())
-      } catch {
-        case e: java.util.concurrent.ExecutionException =>
-          pool.shutdownNow(); throw e.getCause
-      } finally pool.shutdown()
+    val (fpPart, fpArr) = graft.plans.Overlap.two(
+      filesOf("1_by_part",
+        Seq(col("p"), col("l_orderkey"), col("l_linenumber"))),
+      filesOf("2_arrival", Seq(col("l_orderkey"), col("l_linenumber"))))
     val fp = fpPart.unionAll(fpArr)
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
