@@ -19,4 +19,10 @@ object ExactMath {
     * one place or not at all. */
   def ln9(e: Column): Column =
     round(log(e), 9).cast("decimal(12,9)")
+
+  /** Round to 6 dp, then add 0.0: a value in (-0.5e-6, 0) rounds to +0.0
+    * in Spark but -0.0 in DuckDB, and `+ 0.0` (`round(x, 6) + 0.0` in the
+    * oracle) clears the sign bit on both engines (README "Correctness &
+    * parity conventions", negative zero). */
+  def r6(c: Column): Column = round(c, 6) + lit(0.0)
 }

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Skew mitigation by key salting: the standard two-stage rewrite for
   * aggregations whose key distribution is pathological (one key holding a
   * large fraction of all rows ⇒ one reducer task holding the job hostage).
@@ -86,21 +88,45 @@ object Salting {
     * the oracle under regrouping), then cast to double for the output —
     * the same parity convention as Kpis q1/q7.
     */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q43_salted_sum" -> ((spark: SparkSession, dir: String) => {
-      val li = spark.read.parquet(s"$dir/lineitem.parquet")
-        .select(col("l_returnflag"),
-          col("l_quantity").cast("decimal(18,4)").as("qty"),
-          col("l_orderkey"), col("l_linenumber"))
-      saltedSumCount(li, "l_returnflag", "qty",
-          struct(col("l_orderkey"), col("l_linenumber")), saltBuckets = 32)
-        .select(col("l_returnflag"),
-          col("sum_qty").cast("double").as("sum_qty"),
-          col("n_rows"))
-        .orderBy("l_returnflag")
-    }),
-    "q63_salted_join" -> (q63SaltedJoin _),
-    "q65_skew_profile" -> (q65SkewProfile _))
+  def queries: Seq[Query] = Seq(
+    Query("q43_salted_sum",
+      ((spark: SparkSession, dir: String) => {
+        val li = spark.read.parquet(s"$dir/lineitem.parquet")
+          .select(col("l_returnflag"),
+            col("l_quantity").cast("decimal(18,4)").as("qty"),
+            col("l_orderkey"), col("l_linenumber"))
+        saltedSumCount(li, "l_returnflag", "qty",
+            struct(col("l_orderkey"), col("l_linenumber")), saltBuckets = 32)
+          .select(col("l_returnflag"),
+            col("sum_qty").cast("double").as("sum_qty"),
+            col("n_rows"))
+          .orderBy("l_returnflag")
+      }),
+      """SELECT l_returnflag,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
+        |  COUNT(*) AS n_rows
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("q63_salted_join", q63SaltedJoin _,
+      """WITH li AS (
+        |  SELECT CASE WHEN l_orderkey % 3 = 0 THEN 1 ELSE l_suppkey END AS suppkey,
+        |    CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4)) AS rev
+        |  FROM lineitem)
+        |SELECT s_suppkey AS suppkey, s_name,
+        |  CAST(SUM(rev) AS DOUBLE) AS revenue,
+        |  COUNT(*) AS n_items
+        |FROM li JOIN supplier ON li.suppkey = s_suppkey
+        |GROUP BY 1, 2 ORDER BY 1""".stripMargin),
+    Query("q65_skew_profile", q65SkewProfile _,
+      """WITH counts AS (
+        |  SELECT CASE WHEN l_orderkey % 3 = 0 THEN 1 ELSE l_suppkey END AS suppkey,
+        |    COUNT(*) AS n
+        |  FROM lineitem GROUP BY 1),
+        |totals AS (SELECT SUM(n) AS total, COUNT(*) AS n_keys FROM counts)
+        |SELECT suppkey, n,
+        |  CAST(n AS DOUBLE) / total AS share,
+        |  CAST(n * n_keys AS DOUBLE) / total AS hot_factor
+        |FROM counts, totals
+        |ORDER BY n DESC, suppkey LIMIT 5""".stripMargin))
 
   /** q65: key-distribution profiler — the diagnostic you run BEFORE
     * reaching for [[saltedJoin]]/[[saltedSumCount]]: per-key row counts
@@ -149,32 +175,4 @@ object Salting {
         count(lit(1)).as("n_items"))
       .orderBy("suppkey")
   }
-
-  def oracles: Map[String, String] = Map(
-    "q43_salted_sum" ->
-      """SELECT l_returnflag,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-        |  COUNT(*) AS n_rows
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q63_salted_join" ->
-      """WITH li AS (
-        |  SELECT CASE WHEN l_orderkey % 3 = 0 THEN 1 ELSE l_suppkey END AS suppkey,
-        |    CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4)) AS rev
-        |  FROM lineitem)
-        |SELECT s_suppkey AS suppkey, s_name,
-        |  CAST(SUM(rev) AS DOUBLE) AS revenue,
-        |  COUNT(*) AS n_items
-        |FROM li JOIN supplier ON li.suppkey = s_suppkey
-        |GROUP BY 1, 2 ORDER BY 1""".stripMargin,
-    "q65_skew_profile" ->
-      """WITH counts AS (
-        |  SELECT CASE WHEN l_orderkey % 3 = 0 THEN 1 ELSE l_suppkey END AS suppkey,
-        |    COUNT(*) AS n
-        |  FROM lineitem GROUP BY 1),
-        |totals AS (SELECT SUM(n) AS total, COUNT(*) AS n_keys FROM counts)
-        |SELECT suppkey, n,
-        |  CAST(n AS DOUBLE) / total AS share,
-        |  CAST(n * n_keys AS DOUBLE) / total AS hot_factor
-        |FROM counts, totals
-        |ORDER BY n DESC, suppkey LIMIT 5""".stripMargin)
 }

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.TextFunctions.{fingerprint, jaccard, shingles, tokens}
 import graft.multimodal.Multimodal.{Codec, FrameH, FrameW, dhash56}
 
@@ -676,13 +677,8 @@ object CrossModal {
        |WHERE NOT (img_drop = 1 AND cap_drop = 1)
        |ORDER BY pair_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q434_crossmodal_pairs" -> (q434CrossmodalPairs _),
-    "q438_crossmodal_kept" -> (q438CrossmodalKept _),
-    "q440_audiotext_pairs" -> (q440AudiotextPairs _))
-
-  def oracles: Map[String, String] = Map(
-    "q434_crossmodal_pairs" -> q434Sql,
-    "q438_crossmodal_kept" -> q438Sql,
-    "q440_audiotext_pairs" -> q440Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q434_crossmodal_pairs", q434CrossmodalPairs _, q434Sql),
+    Query("q438_crossmodal_kept", q438CrossmodalKept _, q438Sql),
+    Query("q440_audiotext_pairs", q440AudiotextPairs _, q440Sql))
 }

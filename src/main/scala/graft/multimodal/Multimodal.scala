@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Query
+
 /** Multimodal-column plumbing (builder brief): image/audio/video carried as
   * opaque `binary` columns with typed metadata, processed in partition-local
   * batches.
@@ -1089,19 +1091,11 @@ object Multimodal {
       |     / CAST(SUM(n_frames) AS DOUBLE), 6) + 0.0 FROM ($q360Sql))
       |ORDER BY stage""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q29_media_features" -> q29MediaFeatures _,
-    "q333_frame_stats" -> q333FrameStats _,
-    "q360_audio_segments" -> q360AudioSegments _,
-    "q370_image_phash_dedup" -> q370ImagePhashDedup _,
-    "q374_audio_fp_dedup" -> q374AudioFpDedup _,
-    "q386_multimodal_ledger" -> q386MultimodalLedger _)
-
-  def oracles: Map[String, String] = Map(
-    "q29_media_features" -> q29Sql,
-    "q333_frame_stats" -> q333Sql,
-    "q360_audio_segments" -> q360Sql,
-    "q370_image_phash_dedup" -> q370Sql,
-    "q374_audio_fp_dedup" -> q374Sql,
-    "q386_multimodal_ledger" -> q386Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q29_media_features", q29MediaFeatures _, q29Sql),
+    Query("q333_frame_stats", q333FrameStats _, q333Sql),
+    Query("q360_audio_segments", q360AudioSegments _, q360Sql),
+    Query("q370_image_phash_dedup", q370ImagePhashDedup _, q370Sql),
+    Query("q374_audio_fp_dedup", q374AudioFpDedup _, q374Sql),
+    Query("q386_multimodal_ledger", q386MultimodalLedger _, q386Sql))
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** As-of join: attach to each left row the most recent right row with
   * `rightTime <= leftTime` within the same key — the time-series join
   * Spark has no built-in for (the canonical example of the
@@ -177,11 +179,7 @@ object AsOfJoin {
       |    AS share
       |FROM census ORDER BY event_type, match_class""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q39_events_asof_orders" -> q39EventsAsofOrders _,
-    "q193_asof_freshness" -> (q193AsofFreshness _))
-
-  def oracles: Map[String, String] = Map(
-    "q39_events_asof_orders" -> q39Sql,
-    "q193_asof_freshness" -> q193Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q39_events_asof_orders", q39EventsAsofOrders _, q39Sql),
+    Query("q193_asof_freshness", q193AsofFreshness _, q193Sql))
 }

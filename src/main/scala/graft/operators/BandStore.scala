@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.TextFunctions.{jaccard, minhashBands, minhashSignature, shingles, tokens}
 import graft.queries.Kpis
 import graft.sink.Warehouse
@@ -409,11 +410,7 @@ object BandStore {
        |  ON a.phase = b.phase AND a.doc_id = b.doc_id
        |ORDER BY b.phase, b.doc_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q435_band_store_probe" -> (q435BandStoreProbe _),
-    "q436_band_store_evolution" -> (q436BandStoreEvolution _))
-
-  def oracles: Map[String, String] = Map(
-    "q435_band_store_probe" -> q435Sql,
-    "q436_band_store_evolution" -> q436Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q435_band_store_probe", q435BandStoreProbe _, q435Sql),
+    Query("q436_band_store_evolution", q436BandStoreEvolution _, q436Sql))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.TextFunctions.{md5Hash60, md5Hash60Sql, tokens}
 import graft.queries.Kpis
 import graft.sink.Warehouse
@@ -348,9 +349,6 @@ object BoilerStore {
       |FROM pj GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q450_boiler_store_evolution" -> (q450BoilerStoreEvolution _))
-
-  def oracles: Map[String, String] = Map(
-    "q450_boiler_store_evolution" -> q450Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q450_boiler_store_evolution", q450BoilerStoreEvolution _, q450Sql))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.queries.Kpis
 
 /** CDC changelog compaction — apply an ordered stream of upserts and
@@ -123,9 +124,6 @@ object ChangelogCompact {
       |FROM last WHERE rn = 1 AND op <> 'D'
       |ORDER BY orderkey""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q61_cdc_compact" -> (q61CdcCompact _))
-
-  def oracles: Map[String, String] = Map(
-    "q61_cdc_compact" -> q61Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q61_cdc_compact", q61CdcCompact _, q61Sql))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.queries.Kpis
 
 /** Per-column statistical profiler — the Deequ/ANALYZE-style "describe
@@ -65,9 +66,6 @@ object ColumnProfile {
     Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
       .map(colSql).mkString("", "\nUNION ALL\n", "\nORDER BY \"column\"")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q82_column_profile" -> (q82ColumnProfile _))
-
-  def oracles: Map[String, String] = Map(
-    "q82_column_profile" -> q82Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q82_column_profile", q82ColumnProfile _, q82Sql))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.TextFunctions
 
 /** Consistent per-group sampling: keep the k rows with the smallest
@@ -74,9 +75,6 @@ object ConsistentSample {
       |SELECT lang, CAST(rk - 1 AS INTEGER) AS pos, doc_id
       |FROM r WHERE rk <= 8 ORDER BY lang, pos""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q38_consistent_sample" -> q38ConsistentSample _)
-
-  def oracles: Map[String, String] = Map(
-    "q38_consistent_sample" -> q38Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q38_consistent_sample", q38ConsistentSample _, q38Sql))
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.Query
+import graft.functions.ExactMath.r6
 import graft.functions.TextFunctions
 
 /** Near-duplicate CLUSTERING: candidate pairs → similarity edges →
@@ -692,7 +694,6 @@ object DupClusters {
       prefixCandidatePairs(sh, t = 0.7)
         .select(col("a"), col("b"), lit(1L).as("is_cand")))
     sh.unpersist()
-    def r6(c: Column): Column = round(c, 6) + lit(0.0)
     pairs.join(cand, Seq("a", "b"), "left")
       .groupBy(col("k_edits"))
       .agg(count(lit(1)).as("n_pairs"),
@@ -774,15 +775,19 @@ object DupClusters {
       |FROM pairs p LEFT JOIN cand c ON p.a = c.a AND p.b = c.b
       |GROUP BY k_edits ORDER BY k_edits""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q427_edit_tolerance" -> (q427EditTolerance _),
-    "q417_cluster_split" -> (q417ClusterSplit _),
-    "q45_dup_clusters" -> (q45DupClusters _),
-    "q189_cluster_census" -> (q189ClusterCensus _),
-    "q198_similarity_histogram" -> (q198SimilarityHistogram _),
-    "q247_dedup_keep_audit" -> (q247DedupKeepAudit _),
-    "q364_soft_dedup_weights" -> (q364SoftDedupWeights _),
-    "q396_cluster_quality" -> (q396ClusterQuality _))
+  def queries: Seq[Query] = Seq(
+    Query("q427_edit_tolerance", q427EditTolerance _, q427Sql),
+    Query("q417_cluster_split", q417ClusterSplit _, q417Sql),
+    Query("q45_dup_clusters", q45DupClusters _,
+      (q45Cte +
+        """SELECT node AS doc_id, cluster_id, CAST(n AS BIGINT) AS cluster_size
+          |FROM comp JOIN sizes USING (cluster_id)
+          |ORDER BY doc_id""".stripMargin)),
+    Query("q189_cluster_census", q189ClusterCensus _, q189Sql),
+    Query("q198_similarity_histogram", q198SimilarityHistogram _, q198Sql),
+    Query("q247_dedup_keep_audit", q247DedupKeepAudit _, q247Sql),
+    Query("q364_soft_dedup_weights", q364SoftDedupWeights _, q364Sql),
+    Query("q396_cluster_quality", q396ClusterQuality _, q396Sql))
 
   // --------------------------------------------------------------- q247
   /** Dedup keep-choice audit: q45's clusters keep the MIN-id member —
@@ -1003,17 +1008,4 @@ object DupClusters {
     """SELECT CAST(n AS BIGINT) AS cluster_size, COUNT(*) AS n_clusters,
       |  CAST(SUM(n) AS BIGINT) AS n_docs
       |FROM sizes GROUP BY 1 ORDER BY 1""".stripMargin
-
-  def oracles: Map[String, String] = Map(
-    "q427_edit_tolerance" -> q427Sql,
-    "q417_cluster_split" -> q417Sql,
-    "q396_cluster_quality" -> q396Sql,
-    "q364_soft_dedup_weights" -> q364Sql,
-    "q247_dedup_keep_audit" -> q247Sql,
-    "q189_cluster_census" -> q189Sql,
-    "q198_similarity_histogram" -> q198Sql,
-    "q45_dup_clusters" -> (q45Cte +
-      """SELECT node AS doc_id, cluster_id, CAST(n AS BIGINT) AS cluster_size
-        |FROM comp JOIN sizes USING (cluster_id)
-        |ORDER BY doc_id""".stripMargin))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.VectorFunctions._
 import graft.queries.Kpis
 
@@ -158,9 +159,6 @@ object IncrementalCells {
       |ORDER BY y.vec_id""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q339_cell_append" -> (q339CellAppend _))
-
-  def oracles: Map[String, String] = Map(
-    "q339_cell_append" -> q339Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q339_cell_append", q339CellAppend _, q339Sql))
 }

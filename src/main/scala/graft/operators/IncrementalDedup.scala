@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.TextFunctions.fingerprint
 import graft.queries.Kpis
 import graft.sink.Warehouse
@@ -115,9 +116,6 @@ object IncrementalDedup {
       |    FROM novel) WHERE rk = 1)
       |SELECT doc_id, lang, fp FROM intra ORDER BY doc_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q94_incremental_dedup" -> (q94IncrementalDedup _))
-
-  def oracles: Map[String, String] = Map(
-    "q94_incremental_dedup" -> q94Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q94_incremental_dedup", q94IncrementalDedup _, q94Sql))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.VectorFunctions._
 import graft.queries.Kpis
 
@@ -272,9 +273,6 @@ object IncrementalIvf {
       |ORDER BY query_id, rank""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q153_ivf_append" -> (q153IvfAppend _))
-
-  def oracles: Map[String, String] = Map(
-    "q153_ivf_append" -> q153Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q153_ivf_append", q153IvfAppend _, q153Sql))
 }

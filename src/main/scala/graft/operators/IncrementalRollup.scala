@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.queries.Kpis
 import graft.sink.Warehouse
 
@@ -106,9 +107,6 @@ object IncrementalRollup {
       |GROUP BY o_custkey
       |ORDER BY o_custkey""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q118_incremental_rollup" -> (q118IncrementalRollup _))
-
-  def oracles: Map[String, String] = Map(
-    "q118_incremental_rollup" -> q118Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q118_incremental_rollup", q118IncrementalRollup _, q118Sql))
 }

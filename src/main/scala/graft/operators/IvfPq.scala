@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.VectorFunctions._
 import graft.queries.Kpis
 
@@ -223,9 +224,6 @@ object IvfPq {
       |ORDER BY query_id, rank""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q66_ivf_pq" -> (q66IvfPq _))
-
-  def oracles: Map[String, String] = Map(
-    "q66_ivf_pq" -> q66Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q66_ivf_pq", q66IvfPq _, q66Sql))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.VectorFunctions._
 import graft.queries.Kpis
 
@@ -649,21 +650,12 @@ object KMeans {
       |FROM r GROUP BY cluster ORDER BY cluster""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q60_kmeans" -> (q60Kmeans _),
-    "q64_pq_codes" -> (q64PqCodes _),
-    "q272_pq_utilization" -> (q272PqUtilization _),
-    "q277_ivf_imbalance" -> (q277IvfImbalance _),
-    "q278_cell_label_nmi" -> (q278CellLabelNmi _),
-    "q368_cell_label_ari" -> (q368CellLabelAri _),
-    "q375_coreset_cells" -> (q375CoresetCells _))
-
-  def oracles: Map[String, String] = Map(
-    "q60_kmeans" -> q60Sql,
-    "q64_pq_codes" -> q64Sql,
-    "q272_pq_utilization" -> q272Sql,
-    "q277_ivf_imbalance" -> q277Sql,
-    "q278_cell_label_nmi" -> q278Sql,
-    "q368_cell_label_ari" -> q368Sql,
-    "q375_coreset_cells" -> q375Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q60_kmeans", q60Kmeans _, q60Sql),
+    Query("q64_pq_codes", q64PqCodes _, q64Sql),
+    Query("q272_pq_utilization", q272PqUtilization _, q272Sql),
+    Query("q277_ivf_imbalance", q277IvfImbalance _, q277Sql),
+    Query("q278_cell_label_nmi", q278CellLabelNmi _, q278Sql),
+    Query("q368_cell_label_ari", q368CellLabelAri _, q368Sql),
+    Query("q375_coreset_cells", q375CoresetCells _, q375Sql))
 }

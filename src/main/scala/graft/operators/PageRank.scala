@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.Query
 import graft.queries.Kpis
 
 /** PageRank by iterated join+aggregate — the graph-centrality primitive a
@@ -154,9 +155,6 @@ object PageRank {
       |ORDER BY rank_score DESC, r.node LIMIT 20""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q80_pagerank" -> (q80Pagerank _))
-
-  def oracles: Map[String, String] = Map(
-    "q80_pagerank" -> q80Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q80_pagerank", q80Pagerank _, q80Sql))
 }

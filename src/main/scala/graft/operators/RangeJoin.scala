@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Binned range join: match point rows to interval rows
   * (`start <= point < end`) within a key — the interval/range join from
   * the custom-operator ladder, built as a composition.
@@ -117,9 +119,6 @@ object RangeJoin {
       |  COUNT(DISTINCT o_orderkey) AS n_active_orders
       |FROM m GROUP BY user_id ORDER BY user_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q40_events_in_order_windows" -> q40EventsInOrderWindows _)
-
-  def oracles: Map[String, String] = Map(
-    "q40_events_in_order_windows" -> q40Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q40_events_in_order_windows", q40EventsInOrderWindows _, q40Sql))
 }

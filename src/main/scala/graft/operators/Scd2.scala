@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
+import graft.functions.ExactMath.r6
 import graft.queries.Kpis
 
 /** SCD type-2 history builder — collapses a per-key ordered attribute
@@ -199,7 +201,6 @@ object Scd2 {
           col("valid_to") < date_sub(col("now"), r), col("n_orders"))
           .otherwise(0L)).as(s"go_$r")))
     val a = scd.crossJoin(broadcast(now)).agg(exprs.head, exprs.tail: _*)
-    def r6(c: Column): Column = round(c, 6) + lit(0.0)
     a.select(col("n_versions"), col("n_live"), col("orders_total"), expr(
         s"stack(${horizons.length}, " + horizons.map(r =>
           s"${r}L, gc_$r, go_$r").mkString(", ") +
@@ -241,14 +242,9 @@ object Scd2 {
       |    6) + 0.0 AS gc_order_share
       |FROM per ORDER BY retention_days""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q54_priority_scd2" -> (q54PriorityScd2 _),
-    "q413_retention_plan" -> (q413RetentionPlan _),
-    "q171_scd2_asof" -> (q171Scd2Asof _))
-
-  def oracles: Map[String, String] = Map(
-    "q54_priority_scd2" ->
-      (scd2Cte + "SELECT * FROM scd ORDER BY custkey, version"),
-    "q413_retention_plan" -> q413Sql,
-    "q171_scd2_asof" -> q171Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q54_priority_scd2", q54PriorityScd2 _,
+      (scd2Cte + "SELECT * FROM scd ORDER BY custkey, version")),
+    Query("q413_retention_plan", q413RetentionPlan _, q413Sql),
+    Query("q171_scd2_asof", q171Scd2Asof _, q171Sql))
 }

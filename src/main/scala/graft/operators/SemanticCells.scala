@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.VectorFunctions._
 import graft.queries.Kpis
 
@@ -223,11 +224,7 @@ object SemanticCells {
       |ORDER BY vec_id""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q99_semantic_cells" -> (q99SemanticCells _),
-    "q101_semantic_cells_mp" -> (q101SemanticCellsMp _))
-
-  def oracles: Map[String, String] = Map(
-    "q99_semantic_cells" -> q99Sql,
-    "q101_semantic_cells_mp" -> q101Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q99_semantic_cells", q99SemanticCells _, q99Sql),
+    Query("q101_semantic_cells_mp", q101SemanticCellsMp _, q101Sql))
 }

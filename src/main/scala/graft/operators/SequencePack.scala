@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.TextFunctions
 
 /** Sequence packing — the concat-and-chunk step that turns a document
@@ -68,11 +69,8 @@ object SequencePack {
       .orderBy("doc_id")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q47_sequence_pack" -> (q47SequencePack _))
-
-  def oracles: Map[String, String] = Map(
-    "q47_sequence_pack" ->
+  def queries: Seq[Query] = Seq(
+    Query("q47_sequence_pack", q47SequencePack _,
       """WITH d AS (
         |  SELECT doc_id, lang,
         |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
@@ -90,5 +88,5 @@ object SequencePack {
         |  CAST(greatest(cum_after - 1, cum_after - n_tokens) // 512
         |    - (cum_after - n_tokens) // 512 + 1 AS BIGINT) AS n_seqs,
         |  CAST((cum_after - n_tokens) % 512 AS INTEGER) AS offset_in_seq
-        |FROM c ORDER BY doc_id""".stripMargin)
+        |FROM c ORDER BY doc_id""".stripMargin))
 }

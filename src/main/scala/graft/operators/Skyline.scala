@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.queries.Kpis
 
 /** 2-D Pareto skyline: the rows not strictly dominated on a
@@ -75,9 +76,6 @@ object Skyline {
       |    AND (d.p_retailprice < p.p_retailprice OR d.p_size > p.p_size))
       |ORDER BY p_retailprice, p_size, p_partkey""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q134_part_skyline" -> (q134PartSkyline _))
-
-  def oracles: Map[String, String] = Map(
-    "q134_part_skyline" -> q134Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q134_part_skyline", q134PartSkyline _, q134Sql))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.queries.Kpis
 
 /** Keyed snapshot diff — the "what changed between two table versions"
@@ -165,11 +166,7 @@ object SnapshotDiff {
       |   OR fp_primary IS DISTINCT FROM fp_replica
       |ORDER BY segment""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q90_snapshot_diff" -> (q90SnapshotDiff _),
-    "q190_segment_digest_diff" -> (q190SegmentDigestDiff _))
-
-  def oracles: Map[String, String] = Map(
-    "q90_snapshot_diff" -> q90Sql,
-    "q190_segment_digest_diff" -> q190Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q90_snapshot_diff", q90SnapshotDiff _, q90Sql),
+    Query("q190_segment_digest_diff", q190SegmentDigestDiff _, q190Sql))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.queries.SubstringQueries.{BF, K, L}
 import graft.sink.Warehouse
 
@@ -246,9 +247,6 @@ object SubstringStore {
       |LEFT JOIN hits h ON b.doc_id = h.doc_id
       |ORDER BY b.doc_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q358_incremental_substring" -> (q358IncrementalSubstring _))
-
-  def oracles: Map[String, String] = Map(
-    "q358_incremental_substring" -> q358Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q358_incremental_substring", q358IncrementalSubstring _, q358Sql))
 }

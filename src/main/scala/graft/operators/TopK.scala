@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{ColumnShim, TopKLongPairs}
 
+import graft.Query
 import graft.queries.{Kpis, Tpch3Queries}
 
 /** Per-group top-k WITHOUT a window sort: the native bounded aggregate
@@ -67,11 +68,8 @@ object TopK {
       .orderBy(col("n_name"), col("rk"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q168_topk_agg_parts" -> (q168TopkAggParts _))
-
-  def oracles: Map[String, String] = Map(
+  def queries: Seq[Query] = Seq(
     // q113's oracle verbatim: the certificate IS that the bounded
     // aggregate reproduces the window plan's exact output
-    "q168_topk_agg_parts" -> Tpch3Queries.q113Sql)
+    Query("q168_topk_agg_parts", q168TopkAggParts _, Tpch3Queries.q113Sql))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.TextFunctions.{md5Hash60, md5Hash60Sql}
 import graft.queries.Kpis
 
@@ -76,9 +77,6 @@ object WeightedSample {
        |ORDER BY aes_score DESC, CAST(o_orderkey AS VARCHAR)
        |LIMIT 20""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q79_weighted_sample" -> (q79WeightedSample _))
-
-  def oracles: Map[String, String] = Map(
-    "q79_weighted_sample" -> q79Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q79_weighted_sample", q79WeightedSample _, q79Sql))
 }

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Market-basket co-occurrence mining — pairwise frequent itemsets over
   * order baskets, the recommendation/affinity primitive ("parts bought
   * together") every commerce warehouse runs.
@@ -77,9 +79,6 @@ object BasketQueries {
       |ORDER BY n_both DESC, pa, pb
       |LIMIT 20""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q92_copurchase" -> (q92Copurchase _))
-
-  def oracles: Map[String, String] = Map(
-    "q92_copurchase" -> q92Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q92_copurchase", q92Copurchase _, q92Sql))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.TextFunctions._
 import graft.operators.DupClusters
 
@@ -181,9 +182,6 @@ object CompactionQueries {
       |    AS buckets_preserved
       |FROM flagged GROUP BY band ORDER BY band""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q340_band_store_gc" -> (q340BandStoreGc _))
-
-  def oracles: Map[String, String] = Map(
-    "q340_band_store_gc" -> q340Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q340_band_store_gc", q340BandStoreGc _, q340Sql))
 }

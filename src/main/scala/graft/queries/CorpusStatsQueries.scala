@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+import graft.functions.ExactMath.r6
 import graft.functions.TextFunctions._
 
 /** Corpus-level statistical text mining beside [[LmQueries]]' perplexity
@@ -813,8 +815,6 @@ object CorpusStatsQueries {
           .cast("decimal(24,9)"))
     val totals = graded.groupBy(col("alpha"))
       .agg(sum(col("w")).as("tw"))
-    def r6(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      round(c, 6) + lit(0.0)
     graded.join(broadcast(totals), "alpha")
       .withColumn("p", col("w").cast("double") / col("tw").cast("double"))
       .withColumn("ent_term",
@@ -876,23 +876,23 @@ object CorpusStatsQueries {
       |    / CAST(MAX(tw) AS DOUBLE), 6) + 0.0 AS bottom_half_mass
       |FROM terms GROUP BY alpha ORDER BY alpha""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q418_neg_sampling" -> (q418NegSampling _),
-    "q372_good_turing" -> (q372GoodTuring _),
-    "q326_jarque_bera" -> (q326JarqueBera _),
-    "q298_chao1_vocab" -> (q298Chao1Vocab _),
-    "q265_yule_diversity" -> (q265YuleDiversity _),
-    "q112_pmi_collocations" -> (q112PmiCollocations _),
-    "q114_lang_overlap" -> (q114LangOverlap _),
-    "q115_zipf_fit" -> (q115ZipfFit _),
-    "q147_heaps_fit" -> (q147HeapsFit _),
-    "q184_vocab_richness" -> (q184VocabRichness _),
-    "q205_term_burstiness" -> (q205TermBurstiness _),
-    "q228_token_gini" -> (q228TokenGini _),
-    "q232_distinctive_terms" -> (q232DistinctiveTerms _),
-    "q233_countmin_cert" -> (q233CountMinCert _),
-    "q242_vocab_sizing" -> (q242VocabSizing _),
-    "q243_skipgram_pmi" -> (q243SkipgramPmi _))
+  def queries: Seq[Query] = Seq(
+    Query("q418_neg_sampling", q418NegSampling _, q418Sql),
+    Query("q372_good_turing", q372GoodTuring _, q372Sql),
+    Query("q326_jarque_bera", q326JarqueBera _, q326Sql),
+    Query("q298_chao1_vocab", q298Chao1Vocab _, q298Sql),
+    Query("q265_yule_diversity", q265YuleDiversity _, q265Sql),
+    Query("q112_pmi_collocations", q112PmiCollocations _, q112Sql),
+    Query("q114_lang_overlap", q114LangOverlap _, q114Sql),
+    Query("q115_zipf_fit", q115ZipfFit _, q115Sql),
+    Query("q147_heaps_fit", q147HeapsFit _, q147Sql),
+    Query("q184_vocab_richness", q184VocabRichness _, q184Sql),
+    Query("q205_term_burstiness", q205TermBurstiness _, q205Sql),
+    Query("q228_token_gini", q228TokenGini _, q228Sql),
+    Query("q232_distinctive_terms", q232DistinctiveTerms _, q232Sql),
+    Query("q233_countmin_cert", q233CountMinCert _, q233Sql),
+    Query("q242_vocab_sizing", q242VocabSizing _, q242Sql),
+    Query("q243_skipgram_pmi", q243SkipgramPmi _, q243Sql))
 
   // --------------------------------------------------------------- q243
   /** Skip-gram PMI associations within a ±3 word window: q112 measures
@@ -1266,22 +1266,4 @@ object CorpusStatsQueries {
       |    CAST(vocab + 1 AS DOUBLE) / CAST(vocab AS DOUBLE), 6) + 0.0
       |    AS gini
       |FROM s""".stripMargin
-
-  def oracles: Map[String, String] = Map(
-    "q418_neg_sampling" -> q418Sql,
-    "q372_good_turing" -> q372Sql,
-    "q326_jarque_bera" -> q326Sql,
-    "q298_chao1_vocab" -> q298Sql,
-    "q265_yule_diversity" -> q265Sql,
-    "q112_pmi_collocations" -> q112Sql,
-    "q114_lang_overlap" -> q114Sql,
-    "q115_zipf_fit" -> q115Sql,
-    "q147_heaps_fit" -> q147Sql,
-    "q184_vocab_richness" -> q184Sql,
-    "q205_term_burstiness" -> q205Sql,
-    "q228_token_gini" -> q228Sql,
-    "q232_distinctive_terms" -> q232Sql,
-    "q233_countmin_cert" -> q233Sql,
-    "q242_vocab_sizing" -> q242Sql,
-    "q243_skipgram_pmi" -> q243Sql)
 }

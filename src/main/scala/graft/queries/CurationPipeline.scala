@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.TextFunctions._
 
 /** q154: the END-TO-END curation pipeline (VERDICT r11 #7) — the
@@ -1223,13 +1224,8 @@ object CurationPipeline {
       |     WHERE doc_id IN (SELECT doc_id FROM resid)))
       |ORDER BY stage_no""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q154_curation_pipeline" -> (q154CurationPipeline _),
-    "q400_curation_v2" -> (q400CurationV2 _),
-    "q432_curation_v3" -> (q432CurationV3 _))
-
-  def oracles: Map[String, String] = Map(
-    "q154_curation_pipeline" -> q154Sql,
-    "q400_curation_v2" -> q400Sql,
-    "q432_curation_v3" -> q432Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q154_curation_pipeline", q154CurationPipeline _, q154Sql),
+    Query("q400_curation_v2", q400CurationV2 _, q400Sql),
+    Query("q432_curation_v3", q432CurationV3 _, q432Sql))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.Query
 import graft.functions.TextFunctions._
 import graft.operators.DupClusters
 
@@ -398,17 +399,10 @@ object CurationQueries {
       |  (round(dev_raw, 6) + 0.0 <= 0.02) AS balanced
       |FROM per ORDER BY shard""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q55_containment_dup" -> (q55ContainmentDup _),
-    "q56_quota_curation" -> (q56QuotaCuration _),
-    "q57_global_shuffle" -> (q57GlobalShuffle _),
-    "q85_paragraph_dedup" -> (q85ParagraphDedup _),
-    "q397_shard_balance" -> (q397ShardBalance _))
-
-  def oracles: Map[String, String] = Map(
-    "q55_containment_dup" -> q55Sql,
-    "q56_quota_curation" -> q56Sql,
-    "q57_global_shuffle" -> q57Sql,
-    "q85_paragraph_dedup" -> q85Sql,
-    "q397_shard_balance" -> q397Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q55_containment_dup", q55ContainmentDup _, q55Sql),
+    Query("q56_quota_curation", q56QuotaCuration _, q56Sql),
+    Query("q57_global_shuffle", q57GlobalShuffle _, q57Sql),
+    Query("q85_paragraph_dedup", q85ParagraphDedup _, q85Sql),
+    Query("q397_shard_balance", q397ShardBalance _, q397Sql))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.TextFunctions._
 
 /** Benchmark decontamination + repetition-based quality signals — the two
@@ -395,16 +396,10 @@ object DecontamQueries {
       |    + 0.0 AS rescued_share
       |FROM groups""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q48_decontam" -> q48Decontam _,
-    "q49_repetition" -> q49Repetition _,
-    "q430_pipeline_order" -> (q430PipelineOrder _),
-    "q116_bloom_decontam" -> q116BloomDecontam _)
-
-  def oracles: Map[String, String] = Map(
-    "q48_decontam" -> q48Sql,
-    "q49_repetition" -> q49Sql,
-    "q430_pipeline_order" -> q430Sql,
+  def queries: Seq[Query] = Seq(
+    Query("q48_decontam", q48Decontam _, q48Sql),
+    Query("q49_repetition", q49Repetition _, q49Sql),
+    Query("q430_pipeline_order", q430PipelineOrder _, q430Sql),
     // identical output contract to q48 — the bloom is plan-side only
-    "q116_bloom_decontam" -> q48Sql)
+    Query("q116_bloom_decontam", q116BloomDecontam _, q48Sql))
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.Query
+import graft.functions.ExactMath.r6
 import graft.functions.TextFunctions._
 
 /** Text / dedup operators over the `documents` table (builder brief:
@@ -1592,7 +1594,6 @@ object DocQueries {
         sum(when(col("cnt") >= 2L, 1L).otherwise(0L)).as("n_dup_groups"))
     val prev = per.select((col("level_id") + 1L).as("level_id"),
       col("dup_docs").as("dup_prev"))
-    def r6(c: Column): Column = round(c, 6) + lit(0.0)
     per.join(broadcast(prev), Seq("level_id"), "left")
       .select(col("level_id"),
         when(col("level_id") === 0L, "raw")
@@ -1652,53 +1653,28 @@ object DocQueries {
       |FROM per p LEFT JOIN per q ON q.level_id = p.level_id - 1
       |ORDER BY p.level_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q411_normalization_ladder" -> (q411NormalizationLadder _),
-    "q283_dup_by_length" -> q283DupByLength _,
-    "q281_lsh_calibration" -> q281LshCalibration _,
-    "q269_dup_flow_matrix" -> q269DupFlowMatrix _,
-    "q251_code_switch" -> q251CodeSwitch _,
-    "q240_boilerplate_shingles" -> q240BoilerplateShingles _,
-    "q230_dedup_savings" -> q230DedupSavings _,
-    "q211_dedup_venn" -> q211DedupVenn _,
-    "q19_exact_dup_docs" -> q19ExactDupDocs _,
-    "q20_text_stats" -> q20TextStats _,
-    "q22_near_dup_minhash" -> q22NearDupMinhash _,
-    "q23_doc_quality" -> q23DocQuality _,
-    "q24_lang_id" -> q24LangId _,
-    "q25_fingerprint" -> q25Fingerprint _,
-    "q27_simhash_near_dup" -> q27SimhashNearDup _,
-    "q31_token_analysis" -> q31TokenAnalysis _,
-    "q32_ngram_jaccard" -> q32NgramJaccard _,
-    "q35_langid_ngram" -> q35LangIdNgram _,
-    "q330_langid_kappa" -> q330LangidKappa _,
-    "q41_sketch_profile" -> q41SketchProfile _,
-    "q42_corpus_curation" -> q42CorpusCuration _,
-    "q389_sig_calibration" -> (q389SigLengthCalibration _),
-    "q58_exact_profile" -> q58ExactProfile _)
-
-  def oracles: Map[String, String] = Map(
-    "q411_normalization_ladder" -> q411Sql,
-    "q283_dup_by_length" -> q283Sql,
-    "q281_lsh_calibration" -> q281Sql,
-    "q269_dup_flow_matrix" -> q269Sql,
-    "q251_code_switch" -> q251Sql,
-    "q240_boilerplate_shingles" -> q240Sql,
-    "q230_dedup_savings" -> q230Sql,
-    "q211_dedup_venn" -> q211Sql,
-    "q41_sketch_profile" -> q41Sql,
-    "q19_exact_dup_docs" -> q19Sql,
-    "q20_text_stats" -> q20Sql,
-    "q22_near_dup_minhash" -> q22Sql,
-    "q23_doc_quality" -> q23Sql,
-    "q24_lang_id" -> q24Sql,
-    "q25_fingerprint" -> q25Sql,
-    "q27_simhash_near_dup" -> q27Sql,
-    "q31_token_analysis" -> q31Sql,
-    "q32_ngram_jaccard" -> q32Sql,
-    "q35_langid_ngram" -> q35Sql,
-    "q330_langid_kappa" -> q330Sql,
-    "q42_corpus_curation" -> q42Sql,
-    "q389_sig_calibration" -> q389Sql,
-    "q58_exact_profile" -> q58Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q411_normalization_ladder", q411NormalizationLadder _, q411Sql),
+    Query("q283_dup_by_length", q283DupByLength _, q283Sql),
+    Query("q281_lsh_calibration", q281LshCalibration _, q281Sql),
+    Query("q269_dup_flow_matrix", q269DupFlowMatrix _, q269Sql),
+    Query("q251_code_switch", q251CodeSwitch _, q251Sql),
+    Query("q240_boilerplate_shingles", q240BoilerplateShingles _, q240Sql),
+    Query("q230_dedup_savings", q230DedupSavings _, q230Sql),
+    Query("q211_dedup_venn", q211DedupVenn _, q211Sql),
+    Query("q19_exact_dup_docs", q19ExactDupDocs _, q19Sql),
+    Query("q20_text_stats", q20TextStats _, q20Sql),
+    Query("q22_near_dup_minhash", q22NearDupMinhash _, q22Sql),
+    Query("q23_doc_quality", q23DocQuality _, q23Sql),
+    Query("q24_lang_id", q24LangId _, q24Sql),
+    Query("q25_fingerprint", q25Fingerprint _, q25Sql),
+    Query("q27_simhash_near_dup", q27SimhashNearDup _, q27Sql),
+    Query("q31_token_analysis", q31TokenAnalysis _, q31Sql),
+    Query("q32_ngram_jaccard", q32NgramJaccard _, q32Sql),
+    Query("q35_langid_ngram", q35LangIdNgram _, q35Sql),
+    Query("q330_langid_kappa", q330LangidKappa _, q330Sql),
+    Query("q41_sketch_profile", q41SketchProfile _, q41Sql),
+    Query("q42_corpus_curation", q42CorpusCuration _, q42Sql),
+    Query("q389_sig_calibration", q389SigLengthCalibration _, q389Sql),
+    Query("q58_exact_profile", q58ExactProfile _, q58Sql))
 }

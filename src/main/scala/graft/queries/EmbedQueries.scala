@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
+import graft.functions.ExactMath.r6
 import graft.functions.VectorFunctions._
 
 /** Similarity-search operators over the `embeddings` table (builder brief:
@@ -1006,7 +1008,6 @@ object EmbedQueries {
           .otherwise(0L)).as(s"h_$p"),
         sum(when(col("c_rank") <= p, 1L).otherwise(0L)).as(s"c_$p")))
     val s = pairs.agg(aggs.head, aggs.tail: _*)
-    def r6(c: Column): Column = round(c, 6) + lit(0.0)
     s.select(col("exact10"), col("all_pairs"), expr(
         s"stack(${ps.length}, " + ps.map(p =>
           s"$p, h_$p, c_$p").mkString(", ") +
@@ -1086,29 +1087,16 @@ object EmbedQueries {
       |ORDER BY nprobe""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q401_nprobe_curve" -> (q401NprobeCurve _),
-    "q384_hard_negatives" -> (q384HardNegatives _),
-    "q262_hubness_audit" -> q262HubnessAudit _,
-    "q254_intrinsic_dim" -> q254IntrinsicDim _,
-    "q209_reciprocal_nn" -> q209ReciprocalNn _,
-    "q21_cosine_topk" -> q21CosineTopk _,
-    "q26_embedding_near_dup" -> q26EmbeddingNearDup _,
-    "q28_ann_lsh" -> q28AnnLsh _,
-    "q33_ann_ivf" -> q33AnnIvf _,
-    "q50_semantic_dedup" -> q50SemanticDedup _,
-    "q53_knn_join" -> q53KnnJoin _)
-
-  def oracles: Map[String, String] = Map(
-    "q401_nprobe_curve" -> q401Sql,
-    "q384_hard_negatives" -> q384Sql,
-    "q262_hubness_audit" -> q262Sql,
-    "q254_intrinsic_dim" -> q254Sql,
-    "q209_reciprocal_nn" -> q209Sql,
-    "q21_cosine_topk" -> q21Sql,
-    "q26_embedding_near_dup" -> q26Sql,
-    "q28_ann_lsh" -> q28Sql,
-    "q33_ann_ivf" -> q33Sql,
-    "q50_semantic_dedup" -> q50Sql,
-    "q53_knn_join" -> q53Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q401_nprobe_curve", q401NprobeCurve _, q401Sql),
+    Query("q384_hard_negatives", q384HardNegatives _, q384Sql),
+    Query("q262_hubness_audit", q262HubnessAudit _, q262Sql),
+    Query("q254_intrinsic_dim", q254IntrinsicDim _, q254Sql),
+    Query("q209_reciprocal_nn", q209ReciprocalNn _, q209Sql),
+    Query("q21_cosine_topk", q21CosineTopk _, q21Sql),
+    Query("q26_embedding_near_dup", q26EmbeddingNearDup _, q26Sql),
+    Query("q28_ann_lsh", q28AnnLsh _, q28Sql),
+    Query("q33_ann_ivf", q33AnnIvf _, q33Sql),
+    Query("q50_semantic_dedup", q50SemanticDedup _, q50Sql),
+    Query("q53_knn_join", q53KnnJoin _, q53Sql))
 }

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+import graft.functions.ExactMath.r6
 import graft.functions.VectorFunctions._
 
 /** Embedding-space distribution statistics — the drift-monitoring
@@ -538,7 +540,6 @@ object EmbedStatsQueries {
       rnd.crossJoin(srt).select(lit(b).as("n_batches"), col("rnd_pairs"),
         col("srt_pairs"))
     }.reduce(_ unionAll _)
-    def r6(c: Column): Column = round(c, 6) + lit(0.0)
     perB.crossJoin(broadcast(totalPos))
       .select(col("n_batches"), col("pos_pairs"),
         col("rnd_pairs"),
@@ -592,19 +593,11 @@ object EmbedStatsQueries {
       .replace("(HASHEXPR)", s"($h)")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q416_inbatch_pairs" -> (q416InbatchPairs _),
-    "q119_embed_covariance" -> (q119EmbedCovariance _),
-    "q126_pca_power" -> (q126PcaPower _),
-    "q166_source_drift" -> (q166SourceDrift _),
-    "q180_silhouette" -> (q180Silhouette _),
-    "q183_effective_dim" -> (q183EffectiveDim _))
-
-  def oracles: Map[String, String] = Map(
-    "q416_inbatch_pairs" -> q416Sql,
-    "q119_embed_covariance" -> q119Sql,
-    "q126_pca_power" -> q126Sql,
-    "q166_source_drift" -> q166Sql,
-    "q180_silhouette" -> q180Sql,
-    "q183_effective_dim" -> q183Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q416_inbatch_pairs", q416InbatchPairs _, q416Sql),
+    Query("q119_embed_covariance", q119EmbedCovariance _, q119Sql),
+    Query("q126_pca_power", q126PcaPower _, q126Sql),
+    Query("q166_source_drift", q166SourceDrift _, q166Sql),
+    Query("q180_silhouette", q180Silhouette _, q180Sql),
+    Query("q183_effective_dim", q183EffectiveDim _, q183Sql))
 }

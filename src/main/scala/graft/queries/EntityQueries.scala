@@ -3,6 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+import graft.functions.ExactMath.r6
+
 /** Entity resolution by blocked fuzzy string matching: find same-length
   * name pairs within levenshtein distance 1 — the dedup primitive for
   * dirty dimension data (typo'd customer/vendor names), sibling of the
@@ -363,7 +366,6 @@ object EntityQueries {
       .crossJoin(pairsOf(Seq(col("len"), col("h1"), col("h2")), "c_lh12"))
       .crossJoin(raw.select(col("id_1"), col("id_2")).distinct()
         .agg(count(lit(1)).as("c_ss")))
-    def r6(c: Column): Column = round(c, 6) + lit(0.0)
     one.select(col("m_all"), expr("stack(4, " +
         "'symspell', c_ss, m_all, " +
         "'len_stride', c_lh1 + c_lh2 - c_lh12, m_stride, " +
@@ -449,17 +451,10 @@ object EntityQueries {
       |  END AS pairs_per_match
       |FROM s ORDER BY strategy""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q409_blocking_plan" -> (q409BlockingPlan _),
-    "q295_jw_name_pairs" -> (q295JwNamePairs _),
-    "q81_fuzzy_names" -> (q81FuzzyNames _),
-    "q88_symspell_names" -> (q88SymspellNames _),
-    "q191_entity_clusters" -> (q191EntityClusters _))
-
-  def oracles: Map[String, String] = Map(
-    "q409_blocking_plan" -> q409Sql,
-    "q295_jw_name_pairs" -> q295Sql,
-    "q81_fuzzy_names" -> q81Sql,
-    "q88_symspell_names" -> q88Sql,
-    "q191_entity_clusters" -> q191Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q409_blocking_plan", q409BlockingPlan _, q409Sql),
+    Query("q295_jw_name_pairs", q295JwNamePairs _, q295Sql),
+    Query("q81_fuzzy_names", q81FuzzyNames _, q81Sql),
+    Query("q88_symspell_names", q88SymspellNames _, q88Sql),
+    Query("q191_entity_clusters", q191EntityClusters _, q191Sql))
 }

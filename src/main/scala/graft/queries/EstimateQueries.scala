@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+import graft.functions.ExactMath.r6
 import graft.functions.TextFunctions.md5Hash60Sql
 
 /** Sampling-based estimators for dedup/curation PLANNING: before paying
@@ -1156,7 +1158,6 @@ object EstimateQueries {
       preds.map { case (nm, c) => cnt(c).as(s"c_$nm") } ++
       pairs.map { case (a, b) => cnt(pm(a) && pm(b)).as(s"j_${a}__$b") }
     val agg = li.agg(exprs.head, exprs.tail: _*)
-    def r6(c: org.apache.spark.sql.Column) = round(c, 6) + lit(0.0)
     agg.select(col("n"), expr(
         s"stack(${pairs.length}, " + pairs.map { case (a, b) =>
           s"'$a', '$b', c_$a, c_$b, j_${a}__$b"
@@ -1308,8 +1309,6 @@ object EstimateQueries {
           col("union_size"))
         .crossJoin(overlap).crossJoin(excluded).crossJoin(broadcast(kthTrue))
     }.reduce(_ unionAll _)
-    def r6(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      round(c, 6) + lit(0.0)
     perS.select(col("n_shards"), col("k"), col("union_size"),
         col("overlap"),
         r6(col("overlap").cast("double") / col("k").cast("double"))
@@ -1370,25 +1369,25 @@ object EstimateQueries {
       .replace("(HASHEXPR)", s"($h)")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q408_predicate_correlation" -> (q408PredicateCorrelation _),
-    "q414_topk_federation" -> (q414TopkFederation _),
-    "q379_quantile_merge_err" -> (q379QuantileMergeErr _),
-    "q357_theta_sketch_cert" -> (q357ThetaSketchCert _),
-    "q356_hll_merge_cert" -> (q356HllMergeCert _),
-    "q349_hll_cert" -> (q349HllCert _),
-    "q329_median_bootstrap" -> (q329MedianBootstrap _),
-    "q299_bloom_fpr_cert" -> (q299BloomFprCert _),
-    "q204_sampled_dup_rate" -> (q204SampledDupRate _),
-    "q208_neyman_alloc" -> (q208NeymanAlloc _),
-    "q216_bootstrap_ci" -> (q216BootstrapCi _),
-    "q218_rule_violations" -> (q218RuleViolations _),
-    "q221_order_reconciliation" -> (q221OrderReconciliation _),
-    "q224_stratified_draw" -> (q224StratifiedDraw _),
-    "q226_double_charges" -> (q226DoubleCharges _),
-    "q234_join_card_est" -> (q234JoinCardEst _),
-    "q244_eb_shrinkage" -> (q244EbShrinkage _),
-    "q245_capture_recapture" -> (q245CaptureRecapture _))
+  def queries: Seq[Query] = Seq(
+    Query("q408_predicate_correlation", q408PredicateCorrelation _, q408Sql),
+    Query("q414_topk_federation", q414TopkFederation _, q414Sql),
+    Query("q379_quantile_merge_err", q379QuantileMergeErr _, q379Sql),
+    Query("q357_theta_sketch_cert", q357ThetaSketchCert _, q357Sql),
+    Query("q356_hll_merge_cert", q356HllMergeCert _, q356Sql),
+    Query("q349_hll_cert", q349HllCert _, q349Sql),
+    Query("q329_median_bootstrap", q329MedianBootstrap _, q329Sql),
+    Query("q299_bloom_fpr_cert", q299BloomFprCert _, q299Sql),
+    Query("q204_sampled_dup_rate", q204SampledDupRate _, q204Sql),
+    Query("q208_neyman_alloc", q208NeymanAlloc _, q208Sql),
+    Query("q216_bootstrap_ci", q216BootstrapCi _, q216Sql),
+    Query("q218_rule_violations", q218RuleViolations _, q218Sql),
+    Query("q221_order_reconciliation", q221OrderReconciliation _, q221Sql),
+    Query("q224_stratified_draw", q224StratifiedDraw _, q224Sql),
+    Query("q226_double_charges", q226DoubleCharges _, q226Sql),
+    Query("q234_join_card_est", q234JoinCardEst _, q234Sql),
+    Query("q244_eb_shrinkage", q244EbShrinkage _, q244Sql),
+    Query("q245_capture_recapture", q245CaptureRecapture _, q245Sql))
 
   // --------------------------------------------------------------- q245
   /** Capture-recapture (Chapman) estimate of the distinct key
@@ -1865,24 +1864,4 @@ object EstimateQueries {
       |    CAST(COUNT(*) - SUM(CASE WHEN detail_sum IS NULL THEN 1 ELSE 0
       |      END) AS DOUBLE), 6) + 0.0 AS mean_abs_rel_diff
       |FROM j""".stripMargin
-
-  def oracles: Map[String, String] = Map(
-    "q408_predicate_correlation" -> q408Sql,
-    "q414_topk_federation" -> q414Sql,
-    "q349_hll_cert" -> q349Sql,
-    "q356_hll_merge_cert" -> q356Sql,
-    "q379_quantile_merge_err" -> q379Sql,
-    "q357_theta_sketch_cert" -> q357Sql,
-    "q329_median_bootstrap" -> q329Sql,
-    "q299_bloom_fpr_cert" -> q299Sql,
-    "q204_sampled_dup_rate" -> q204Sql,
-    "q208_neyman_alloc" -> q208Sql,
-    "q216_bootstrap_ci" -> q216Sql,
-    "q218_rule_violations" -> q218Sql,
-    "q221_order_reconciliation" -> q221Sql,
-    "q224_stratified_draw" -> q224Sql,
-    "q226_double_charges" -> q226Sql,
-    "q234_join_card_est" -> q234Sql,
-    "q244_eb_shrinkage" -> q244Sql,
-    "q245_capture_recapture" -> q245Sql)
 }

@@ -3,6 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+import graft.functions.ExactMath.r6
+
 /** Rank-concordance and effect-size statistics over collapsed censuses —
   * the nonparametric summaries the test family reports next to its
   * p-values: q225's Spearman ρ says "the ranks correlate", Kendall's
@@ -305,7 +308,6 @@ object EvalQueries {
       .select(col("lang"), col("nl"),
         round(col("q_hi") - col("q_lo"), 9).cast("decimal(12,9)")
           .as("gap"))
-    def r6(c: org.apache.spark.sql.Column) = round(c, 6) + lit(0.0)
     pairs.groupBy(col("lang"))
       .agg(max(col("nl")).as("n_docs"), count(lit(1)).as("n_pairs"),
         sum(col("gap")).as("gsum"),
@@ -362,13 +364,8 @@ object EvalQueries {
       |    AS ge_040
       |FROM pairs GROUP BY lang ORDER BY lang""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q428_preference_pairs" -> (q428PreferencePairs _),
-    "q343_kendall_tau" -> (q343KendallTau _),
-    "q344_cliff_delta" -> (q344CliffDelta _))
-
-  def oracles: Map[String, String] = Map(
-    "q428_preference_pairs" -> q428Sql,
-    "q343_kendall_tau" -> q343Sql,
-    "q344_cliff_delta" -> q344Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q428_preference_pairs", q428PreferencePairs _, q428Sql),
+    Query("q343_kendall_tau", q343KendallTau _, q343Sql),
+    Query("q344_cliff_delta", q344CliffDelta _, q344Sql))
 }

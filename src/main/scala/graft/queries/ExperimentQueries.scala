@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Experiment (A/B) analysis over the event stream — the product-analytics
   * primitive that turns raw events into a ship/no-ship decision. Variant
   * assignment is DETERMINISTIC hashing (md5 of the user id, the q30-proven
@@ -1930,45 +1932,24 @@ object ExperimentQueries {
       |FROM x ORDER BY n_per_arm""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q403_mde_table" -> (q403MdeTable _),
-    "q387_sprt_monitor" -> (q387SprtMonitor _),
-    "q369_isotonic_calibration" -> (q369IsotonicCalibration _),
-    "q367_conformal_cert" -> (q367ConformalCert _),
-    "q331_calibration_error" -> (q331CalibrationError _),
-    "q325_kruskal_wallis" -> (q325KruskalWallis _),
-    "q320_bh_fdr" -> (q320BhFdr _),
-    "q316_sequential_looks" -> (q316SequentialLooks _),
-    "q314_srm_check" -> (q314SrmCheck _),
-    "q341_daily_srm" -> (q341DailySrm _),
-    "q315_cuped_reduction" -> (q315CupedReduction _),
-    "q291_score_discrimination" -> (q291ScoreDiscrimination _),
-    "q263_brier_calibration" -> (q263BrierCalibration _),
-    "q260_mcnemar_activity" -> (q260McnemarActivity _),
-    "q238_fold_stability" -> (q238FoldStability _),
-    "q129_ab_test" -> (q129AbTest _),
-    "q150_ks_drift" -> (q150KsDrift _),
-    "q172_permutation_test" -> (q172PermutationTest _),
-    "q203_mann_whitney" -> (q203MannWhitney _))
-
-  def oracles: Map[String, String] = Map(
-    "q403_mde_table" -> q403Sql,
-    "q387_sprt_monitor" -> q387Sql,
-    "q369_isotonic_calibration" -> q369Sql,
-    "q367_conformal_cert" -> q367Sql,
-    "q331_calibration_error" -> q331Sql,
-    "q325_kruskal_wallis" -> q325Sql,
-    "q320_bh_fdr" -> q320Sql,
-    "q316_sequential_looks" -> q316Sql,
-    "q314_srm_check" -> q314Sql,
-    "q341_daily_srm" -> q341Sql,
-    "q315_cuped_reduction" -> q315Sql,
-    "q291_score_discrimination" -> q291Sql,
-    "q263_brier_calibration" -> q263Sql,
-    "q260_mcnemar_activity" -> q260Sql,
-    "q238_fold_stability" -> q238Sql,
-    "q129_ab_test" -> q129Sql,
-    "q150_ks_drift" -> q150Sql,
-    "q172_permutation_test" -> q172Sql,
-    "q203_mann_whitney" -> q203Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q403_mde_table", q403MdeTable _, q403Sql),
+    Query("q387_sprt_monitor", q387SprtMonitor _, q387Sql),
+    Query("q369_isotonic_calibration", q369IsotonicCalibration _, q369Sql),
+    Query("q367_conformal_cert", q367ConformalCert _, q367Sql),
+    Query("q331_calibration_error", q331CalibrationError _, q331Sql),
+    Query("q325_kruskal_wallis", q325KruskalWallis _, q325Sql),
+    Query("q320_bh_fdr", q320BhFdr _, q320Sql),
+    Query("q316_sequential_looks", q316SequentialLooks _, q316Sql),
+    Query("q314_srm_check", q314SrmCheck _, q314Sql),
+    Query("q341_daily_srm", q341DailySrm _, q341Sql),
+    Query("q315_cuped_reduction", q315CupedReduction _, q315Sql),
+    Query("q291_score_discrimination", q291ScoreDiscrimination _, q291Sql),
+    Query("q263_brier_calibration", q263BrierCalibration _, q263Sql),
+    Query("q260_mcnemar_activity", q260McnemarActivity _, q260Sql),
+    Query("q238_fold_stability", q238FoldStability _, q238Sql),
+    Query("q129_ab_test", q129AbTest _, q129Sql),
+    Query("q150_ks_drift", q150KsDrift _, q150Sql),
+    Query("q172_permutation_test", q172PermutationTest _, q172Sql),
+    Query("q203_mann_whitney", q203MannWhitney _, q203Sql))
 }

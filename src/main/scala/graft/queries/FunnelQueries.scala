@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Ordered-funnel and cohort-retention analytics over the event stream —
   * the two product-analytics primitives (beside q34's sessionization and
   * q75's attribution) every event warehouse is asked for.
@@ -1031,31 +1033,17 @@ object FunnelQueries {
       |    / CAST(v AS DOUBLE) >= 3.841458821 AS reject_95
       |FROM sums, sizes""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q347_logrank_test" -> (q347LogRank _),
-    "q310_chain_ladder" -> (q310ChainLadder _),
-    "q270_recency_conversion" -> (q270RecencyConversion _),
-    "q268_purchase_regularity" -> (q268PurchaseRegularity _),
-    "q229_new_vs_returning" -> (q229NewVsReturning _),
-    "q86_funnel" -> (q86Funnel _),
-    "q87_retention" -> (q87Retention _),
-    "q93_conversion_latency" -> (q93ConversionLatency _),
-    "q146_cohort_ltv" -> (q146CohortLtv _),
-    "q192_kaplan_meier" -> (q192KaplanMeier _),
-    "q322_nelson_aalen" -> (q322NelsonAalen _),
-    "q332_bounded_funnel" -> (q332BoundedFunnel _))
-
-  def oracles: Map[String, String] = Map(
-    "q347_logrank_test" -> q347Sql,
-    "q310_chain_ladder" -> q310Sql,
-    "q270_recency_conversion" -> q270Sql,
-    "q268_purchase_regularity" -> q268Sql,
-    "q229_new_vs_returning" -> q229Sql,
-    "q86_funnel" -> q86Sql,
-    "q87_retention" -> q87Sql,
-    "q93_conversion_latency" -> q93Sql,
-    "q146_cohort_ltv" -> q146Sql,
-    "q192_kaplan_meier" -> q192Sql,
-    "q322_nelson_aalen" -> q322Sql,
-    "q332_bounded_funnel" -> q332Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q347_logrank_test", q347LogRank _, q347Sql),
+    Query("q310_chain_ladder", q310ChainLadder _, q310Sql),
+    Query("q270_recency_conversion", q270RecencyConversion _, q270Sql),
+    Query("q268_purchase_regularity", q268PurchaseRegularity _, q268Sql),
+    Query("q229_new_vs_returning", q229NewVsReturning _, q229Sql),
+    Query("q86_funnel", q86Funnel _, q86Sql),
+    Query("q87_retention", q87Retention _, q87Sql),
+    Query("q93_conversion_latency", q93ConversionLatency _, q93Sql),
+    Query("q146_cohort_ltv", q146CohortLtv _, q146Sql),
+    Query("q192_kaplan_meier", q192KaplanMeier _, q192Sql),
+    Query("q322_nelson_aalen", q322NelsonAalen _, q322Sql),
+    Query("q332_bounded_funnel", q332BoundedFunnel _, q332Sql))
 }

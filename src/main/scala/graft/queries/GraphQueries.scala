@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Distributed graph analytics over the co-purchase graph (companion to
   * [[BasketQueries]] q92 and the PageRank/connected-components operators):
   * triangle counting and the global clustering coefficient — the standard
@@ -697,25 +699,14 @@ object GraphQueries {
       |UNION ALL SELECT 6, (SELECT COUNT(*) FROM n6)
       |ORDER BY round""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q294_core_peel" -> (q294CorePeel _),
-    "q286_local_clustering" -> (q286LocalClustering _),
-    "q250_neighbor_degree" -> (q250NeighborDegree _),
-    "q235_rich_club" -> (q235RichClub _),
-    "q213_assortativity" -> (q213Assortativity _),
-    "q111_triangles" -> (q111Triangles _),
-    "q123_khop_bfs" -> (q123KhopBfs _),
-    "q173_cheapest_paths" -> (q173CheapestPaths _),
-    "q186_degree_dist" -> (q186DegreeDist _))
-
-  def oracles: Map[String, String] = Map(
-    "q294_core_peel" -> q294Sql,
-    "q286_local_clustering" -> q286Sql,
-    "q250_neighbor_degree" -> q250Sql,
-    "q235_rich_club" -> q235Sql,
-    "q213_assortativity" -> q213Sql,
-    "q111_triangles" -> q111Sql,
-    "q123_khop_bfs" -> q123Sql,
-    "q173_cheapest_paths" -> q173Sql,
-    "q186_degree_dist" -> q186Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q294_core_peel", q294CorePeel _, q294Sql),
+    Query("q286_local_clustering", q286LocalClustering _, q286Sql),
+    Query("q250_neighbor_degree", q250NeighborDegree _, q250Sql),
+    Query("q235_rich_club", q235RichClub _, q235Sql),
+    Query("q213_assortativity", q213Assortativity _, q213Sql),
+    Query("q111_triangles", q111Triangles _, q111Sql),
+    Query("q123_khop_bfs", q123KhopBfs _, q123Sql),
+    Query("q173_cheapest_paths", q173CheapestPaths _, q173Sql),
+    Query("q186_degree_dist", q186DegreeDist _, q186Sql))
 }

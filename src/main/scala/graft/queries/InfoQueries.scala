@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Information-theoretic data-quality metrics: column-dependence
   * (mutual information), digit-law conformance (Benford), and
   * distribution drift (per-slice KL divergence) — the audits a corpus
@@ -1154,35 +1156,19 @@ object InfoQueries {
       |  CAST(MAX(g) AS DOUBLE) AS ks_qty
       |FROM terms GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q353_wasserstein_matrix" -> (q353WassersteinMatrix _),
-    "q338_benford_2digit" -> (q338Benford2Digit _),
-    "q328_feature_ig" -> (q328FeatureIg _),
-    "q285_circadian_js" -> (q285CircadianJs _),
-    "q284_cents_heaping" -> (q284CentsHeaping _),
-    "q259_entropy_rate" -> (q259EntropyRate _),
-    "q257_source_js_matrix" -> (q257SourceJsMatrix _),
-    "q239_residual_cells" -> (q239ResidualCells _),
-    "q219_feature_gain" -> (q219FeatureGain _),
-    "q137_mutual_info" -> (q137MutualInfo _),
-    "q138_benford_audit" -> (q138BenfordAudit _),
-    "q140_source_lang_kl" -> (q140SourceLangKl _),
-    "q179_chi2_independence" -> (q179Chi2Independence _),
-    "q187_psi_drift" -> (q187PsiDrift _))
-
-  def oracles: Map[String, String] = Map(
-    "q353_wasserstein_matrix" -> q353Sql,
-    "q328_feature_ig" -> q328Sql,
-    "q338_benford_2digit" -> q338Sql,
-    "q285_circadian_js" -> q285Sql,
-    "q284_cents_heaping" -> q284Sql,
-    "q259_entropy_rate" -> q259Sql,
-    "q257_source_js_matrix" -> q257Sql,
-    "q239_residual_cells" -> q239Sql,
-    "q219_feature_gain" -> q219Sql,
-    "q137_mutual_info" -> q137Sql,
-    "q138_benford_audit" -> q138Sql,
-    "q140_source_lang_kl" -> q140Sql,
-    "q179_chi2_independence" -> q179Sql,
-    "q187_psi_drift" -> q187Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q353_wasserstein_matrix", q353WassersteinMatrix _, q353Sql),
+    Query("q338_benford_2digit", q338Benford2Digit _, q338Sql),
+    Query("q328_feature_ig", q328FeatureIg _, q328Sql),
+    Query("q285_circadian_js", q285CircadianJs _, q285Sql),
+    Query("q284_cents_heaping", q284CentsHeaping _, q284Sql),
+    Query("q259_entropy_rate", q259EntropyRate _, q259Sql),
+    Query("q257_source_js_matrix", q257SourceJsMatrix _, q257Sql),
+    Query("q239_residual_cells", q239ResidualCells _, q239Sql),
+    Query("q219_feature_gain", q219FeatureGain _, q219Sql),
+    Query("q137_mutual_info", q137MutualInfo _, q137Sql),
+    Query("q138_benford_audit", q138BenfordAudit _, q138Sql),
+    Query("q140_source_lang_kl", q140SourceLangKl _, q140Sql),
+    Query("q179_chi2_independence", q179Chi2Independence _, q179Sql),
+    Query("q187_psi_drift", q187PsiDrift _, q187Sql))
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Inventory-policy analytics over the order stream — the operational
   * queries a supply-side consumer runs on the same star schema the
   * revenue KPIs read: optimal lot sizing (q345 EOQ) and
@@ -163,11 +165,7 @@ object InventoryQueries {
       |    + 0.0 AS naive_rate
       |FROM wtd GROUP BY p_brand ORDER BY p_brand""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q345_eoq" -> (q345Eoq _),
-    "q346_croston" -> (q346Croston _))
-
-  def oracles: Map[String, String] = Map(
-    "q345_eoq" -> q345Sql,
-    "q346_croston" -> q346Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q345_eoq", q345Eoq _, q345Sql),
+    Query("q346_croston", q346Croston _, q346Sql))
 }

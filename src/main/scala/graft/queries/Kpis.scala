@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Query
+
 /** KPI query half of the rebuild (SURVEY.md §2.5, reference README.md:140-146).
   *
   * The reference delegates all analytics to Postgres/Metabase; here each KPI is
@@ -460,45 +462,23 @@ object Kpis {
       |  MIN(value) AS min_value, MAX(value) AS max_value
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_daily_revenue" -> q1DailyRevenue _,
-    "q2_top_customers" -> q2TopCustomers _,
-    "q3_product_performance" -> q3ProductPerformance _,
-    "q4_rolling_7day" -> q4Rolling7Day _,
-    "q5_failure_trend" -> q5FailureTrend _,
-    "q6_revenue_rollup" -> q6RevenueRollup _,
-    "q7_pricing_summary" -> q7PricingSummary _,
-    "q8_region_revenue" -> q8RegionRevenue _,
-    "q9_top_suppliers" -> q9TopSuppliers _,
-    "q10_segment_stats" -> q10SegmentStats _,
-    "q11_order_priority" -> q11OrderPriority _,
-    "q12_distinct_parts" -> q12DistinctParts _,
-    "q13_events_hourly" -> q13EventsHourly _,
-    "q14_events_json" -> q14EventsJson _,
-    "q15_customer_order_counts" -> q15CustomerOrderCounts _,
-    "q16_customers_no_orders" -> q16CustomersNoOrders _,
-    "q36_late_ship_orders" -> q36LateShipOrders _,
-    "q37_value_percentiles" -> q37ValuePercentiles _
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q1_daily_revenue" -> q1Sql,
-    "q2_top_customers" -> q2Sql,
-    "q3_product_performance" -> q3Sql,
-    "q4_rolling_7day" -> q4Sql,
-    "q5_failure_trend" -> q5Sql,
-    "q6_revenue_rollup" -> q6Sql,
-    "q7_pricing_summary" -> q7Sql,
-    "q8_region_revenue" -> q8Sql,
-    "q9_top_suppliers" -> q9Sql,
-    "q10_segment_stats" -> q10Sql,
-    "q11_order_priority" -> q11Sql,
-    "q12_distinct_parts" -> q12Sql,
-    "q13_events_hourly" -> q13Sql,
-    "q14_events_json" -> q14Sql,
-    "q15_customer_order_counts" -> q15Sql,
-    "q16_customers_no_orders" -> q16Sql,
-    "q36_late_ship_orders" -> q36Sql,
-    "q37_value_percentiles" -> q37Sql
-  )
+  def queries: Seq[Query] = Seq(
+    Query("q1_daily_revenue", q1DailyRevenue _, q1Sql),
+    Query("q2_top_customers", q2TopCustomers _, q2Sql),
+    Query("q3_product_performance", q3ProductPerformance _, q3Sql),
+    Query("q4_rolling_7day", q4Rolling7Day _, q4Sql),
+    Query("q5_failure_trend", q5FailureTrend _, q5Sql),
+    Query("q6_revenue_rollup", q6RevenueRollup _, q6Sql),
+    Query("q7_pricing_summary", q7PricingSummary _, q7Sql),
+    Query("q8_region_revenue", q8RegionRevenue _, q8Sql),
+    Query("q9_top_suppliers", q9TopSuppliers _, q9Sql),
+    Query("q10_segment_stats", q10SegmentStats _, q10Sql),
+    Query("q11_order_priority", q11OrderPriority _, q11Sql),
+    Query("q12_distinct_parts", q12DistinctParts _, q12Sql),
+    Query("q13_events_hourly", q13EventsHourly _, q13Sql),
+    Query("q14_events_json", q14EventsJson _, q14Sql),
+    Query("q15_customer_order_counts", q15CustomerOrderCounts _, q15Sql),
+    Query("q16_customers_no_orders", q16CustomersNoOrders _, q16Sql),
+    Query("q36_late_ship_orders", q36LateShipOrders _, q36Sql),
+    Query("q37_value_percentiles", q37ValuePercentiles _, q37Sql))
 }

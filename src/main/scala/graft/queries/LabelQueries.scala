@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.TextFunctions._
 
 /** Crowd-label aggregation — the labeled-dataset construction step of a
@@ -398,15 +399,9 @@ object LabelQueries {
       |ORDER BY d.doc_id""".stripMargin
 
   // -------------------------------------------------------------- maps
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q449_label_aggregation" -> (q449LabelAggregation _),
-    "q454_annotator_confusion" -> (q454AnnotatorConfusion _),
-    "q455_fleiss_kappa" -> (q455FleissKappa _),
-    "q456_dawid_skene" -> (q456DawidSkene _))
-
-  def oracles: Map[String, String] = Map(
-    "q449_label_aggregation" -> q449Sql,
-    "q454_annotator_confusion" -> q454Sql,
-    "q455_fleiss_kappa" -> q455Sql,
-    "q456_dawid_skene" -> q456Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q449_label_aggregation", q449LabelAggregation _, q449Sql),
+    Query("q454_annotator_confusion", q454AnnotatorConfusion _, q454Sql),
+    Query("q455_fleiss_kappa", q455FleissKappa _, q455Sql),
+    Query("q456_dawid_skene", q456DawidSkene _, q456Sql))
 }

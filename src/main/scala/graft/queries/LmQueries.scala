@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+import graft.functions.ExactMath.r6
 import graft.functions.TextFunctions._
 
 /** Language-model-based quality scoring — the CCNet-style "perplexity
@@ -776,7 +778,6 @@ object LmQueries {
     val docw = tok.join(lp, "token")
       .groupBy(col("doc_id"), col("lang"), col("n_tokens"))
       .agg((round(avg(col("lr")), 6) + lit(0.0)).as("w"))
-    def r6(c: Column): Column = round(c, 6) + lit(0.0)
     docw.groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens").cast("long")).as("tokens"),
@@ -872,7 +873,6 @@ object LmQueries {
           * col("step"), 9))
     def nllOf(term: Column): Column =
       sum((term.cast("decimal(22,9)") * col("cnt")).cast("decimal(38,9)"))
-    def r6(c: Column): Column = round(c, 6) + lit(0.0)
     graded.groupBy(col("b"))
       .agg(max(col("v")).as("vocab"), max(col("n")).as("n_tokens"),
         max(col("levels")).as("levels"), max(col("step")).as("step_raw"),
@@ -931,27 +931,15 @@ object LmQueries {
       |    + 0.0 AS nll_drift
       |FROM per ORDER BY bits""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q412_lm_quantization" -> (q412LmQuantization _),
-    "q406_dsir_weights" -> (q406DsirWeights _),
-    "q362_span_corruption" -> (q362SpanCorruption _),
-    "q327_bpe_merge_ladder" -> (q327BpeMergeLadder _),
-    "q308_bpe_first_merges" -> (q308BpeFirstMerges _),
-    "q236_context_overflow" -> (q236ContextOverflow _),
-    "q59_unigram_nll" -> (q59UnigramNll _),
-    "q83_bigram_nll" -> (q83BigramNll _),
-    "q371_stupid_backoff" -> (q371StupidBackoff _),
-    "q391_nll_threshold_sweep" -> (q391NllThresholdSweep _))
-
-  def oracles: Map[String, String] = Map(
-    "q412_lm_quantization" -> q412Sql,
-    "q406_dsir_weights" -> q406Sql,
-    "q362_span_corruption" -> q362Sql,
-    "q327_bpe_merge_ladder" -> q327Sql,
-    "q308_bpe_first_merges" -> q308Sql,
-    "q236_context_overflow" -> q236Sql,
-    "q59_unigram_nll" -> q59Sql,
-    "q83_bigram_nll" -> q83Sql,
-    "q371_stupid_backoff" -> q371Sql,
-    "q391_nll_threshold_sweep" -> q391Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q412_lm_quantization", q412LmQuantization _, q412Sql),
+    Query("q406_dsir_weights", q406DsirWeights _, q406Sql),
+    Query("q362_span_corruption", q362SpanCorruption _, q362Sql),
+    Query("q327_bpe_merge_ladder", q327BpeMergeLadder _, q327Sql),
+    Query("q308_bpe_first_merges", q308BpeFirstMerges _, q308Sql),
+    Query("q236_context_overflow", q236ContextOverflow _, q236Sql),
+    Query("q59_unigram_nll", q59UnigramNll _, q59Sql),
+    Query("q83_bigram_nll", q83BigramNll _, q83Sql),
+    Query("q371_stupid_backoff", q371StupidBackoff _, q371Sql),
+    Query("q391_nll_threshold_sweep", q391NllThresholdSweep _, q391Sql))
 }

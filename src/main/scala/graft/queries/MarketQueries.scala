@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Market-style temporal aggregates over the event stream: OHLC bars,
   * time-weighted averages, and RFM behavioral segmentation — the three
   * shapes where WHICH row wins inside a group (first/last/weighted)
@@ -1605,29 +1607,29 @@ object MarketQueries {
       |    AS relative_uplift
       |FROM s""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q335_revenue_fan" -> (q335RevenueFan _),
-    "q337_revenue_anomalies" -> (q337RevenueAnomalies _),
-    "q336_chained_index" -> (q336ChainedIndex _),
-    "q313_price_drop_study" -> (q313PriceDropStudy _),
-    "q305_fiscal_445" -> (q305Fiscal445 _),
-    "q306_abc_xyz" -> (q306AbcXyz _),
-    "q304_price_indices" -> (q304PriceIndices _),
-    "q273_nation_cagr" -> (q273NationCagr _),
-    "q267_diversity_profile" -> (q267DiversityProfile _),
-    "q256_theil_decomposition" -> (q256TheilDecomposition _),
-    "q255_segment_migration" -> (q255SegmentMigration _),
-    "q252_revenue_bridge" -> (q252RevenueBridge _),
-    "q227_price_index" -> (q227PriceIndex _),
-    "q215_abc_classification" -> (q215AbcClassification _),
-    "q135_ohlc_hourly" -> (q135OhlcHourly _),
-    "q136_twap_value" -> (q136TwapValue _),
-    "q139_rfm_segments" -> (q139RfmSegments _),
-    "q143_revenue_deciles" -> (q143RevenueDeciles _),
-    "q174_nation_gini" -> (q174NationGini _),
-    "q185_churn_risk" -> (q185ChurnRisk _),
-    "q201_trajectory_census" -> (q201TrajectoryCensus _),
-    "q206_lift_curve" -> (q206LiftCurve _))
+  def queries: Seq[Query] = Seq(
+    Query("q335_revenue_fan", q335RevenueFan _, q335Sql),
+    Query("q337_revenue_anomalies", q337RevenueAnomalies _, q337Sql),
+    Query("q336_chained_index", q336ChainedIndex _, q336Sql),
+    Query("q313_price_drop_study", q313PriceDropStudy _, q313Sql),
+    Query("q305_fiscal_445", q305Fiscal445 _, q305Sql),
+    Query("q306_abc_xyz", q306AbcXyz _, q306Sql),
+    Query("q304_price_indices", q304PriceIndices _, q304Sql),
+    Query("q273_nation_cagr", q273NationCagr _, q273Sql),
+    Query("q267_diversity_profile", q267DiversityProfile _, q267Sql),
+    Query("q256_theil_decomposition", q256TheilDecomposition _, q256Sql),
+    Query("q255_segment_migration", q255SegmentMigration _, q255Sql),
+    Query("q252_revenue_bridge", q252RevenueBridge _, q252Sql),
+    Query("q227_price_index", q227PriceIndex _, q227Sql),
+    Query("q215_abc_classification", q215AbcClassification _, q215Sql),
+    Query("q135_ohlc_hourly", q135OhlcHourly _, q135Sql),
+    Query("q136_twap_value", q136TwapValue _, q136Sql),
+    Query("q139_rfm_segments", q139RfmSegments _, q139Sql),
+    Query("q143_revenue_deciles", q143RevenueDeciles _, q143Sql),
+    Query("q174_nation_gini", q174NationGini _, q174Sql),
+    Query("q185_churn_risk", q185ChurnRisk _, q185Sql),
+    Query("q201_trajectory_census", q201TrajectoryCensus _, q201Sql),
+    Query("q206_lift_curve", q206LiftCurve _, q206Sql))
 
   // --------------------------------------------------------------- q174
   /** Gini coefficient of customer spend per nation — the inequality
@@ -1848,28 +1850,4 @@ object MarketQueries {
       |    CAST(COUNT(*) AS DOUBLE) AS growing_share
       |FROM num JOIN customer ON o_custkey = c_custkey
       |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  def oracles: Map[String, String] = Map(
-    "q335_revenue_fan" -> q335Sql,
-    "q337_revenue_anomalies" -> q337Sql,
-    "q336_chained_index" -> q336Sql,
-    "q313_price_drop_study" -> q313Sql,
-    "q305_fiscal_445" -> q305Sql,
-    "q306_abc_xyz" -> q306Sql,
-    "q304_price_indices" -> q304Sql,
-    "q135_ohlc_hourly" -> q135Sql,
-    "q136_twap_value" -> q136Sql,
-    "q139_rfm_segments" -> q139Sql,
-    "q143_revenue_deciles" -> q143Sql,
-    "q174_nation_gini" -> q174Sql,
-    "q185_churn_risk" -> q185Sql,
-    "q201_trajectory_census" -> q201Sql,
-    "q206_lift_curve" -> q206Sql,
-    "q215_abc_classification" -> q215Sql,
-    "q227_price_index" -> q227Sql,
-    "q252_revenue_bridge" -> q252Sql,
-    "q255_segment_migration" -> q255Sql,
-    "q256_theil_decomposition" -> q256Sql,
-    "q267_diversity_profile" -> q267Sql,
-    "q273_nation_cagr" -> q273Sql)
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.TextFunctions._
 
 /** Frequency-mining operators over the corpus and the order stream:
@@ -358,15 +359,9 @@ object MiningQueries {
       |ORDER BY community""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q160_heavy_hitters" -> (q160HeavyHitters _),
-    "q161_assoc_rules" -> (q161AssocRules _),
-    "q162_label_prop" -> (q162LabelProp _),
-    "q402_modularity" -> (q402Modularity _))
-
-  def oracles: Map[String, String] = Map(
-    "q160_heavy_hitters" -> q160Sql,
-    "q161_assoc_rules" -> q161Sql,
-    "q162_label_prop" -> q162Sql,
-    "q402_modularity" -> q402Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q160_heavy_hitters", q160HeavyHitters _, q160Sql),
+    Query("q161_assoc_rules", q161AssocRules _, q161Sql),
+    Query("q162_label_prop", q162LabelProp _, q162Sql),
+    Query("q402_modularity", q402Modularity _, q402Sql))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.TextFunctions._
 
 /** Corpus novelty/diversity scoring — the curation signals that rank
@@ -233,13 +234,8 @@ object NoveltyQueries {
       |SELECT 3, doc_id, gain, (SELECT COUNT(*) FROM c3) FROM p3
       |ORDER BY step""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q141_trigram_novelty" -> (q141TrigramNovelty _),
-    "q142_char_entropy" -> (q142CharEntropy _),
-    "q152_greedy_cover" -> (q152GreedyCover _))
-
-  def oracles: Map[String, String] = Map(
-    "q141_trigram_novelty" -> q141Sql,
-    "q142_char_entropy" -> q142Sql,
-    "q152_greedy_cover" -> q152Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q141_trigram_novelty", q141TrigramNovelty _, q141Sql),
+    Query("q142_char_entropy", q142CharEntropy _, q142Sql),
+    Query("q152_greedy_cover", q152GreedyCover _, q152Sql))
 }

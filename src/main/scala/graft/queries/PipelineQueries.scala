@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.ingest.Clean
 
 /** Oracle-checked query entries for the ingest operators (SURVEY §1.3, §2.4;
@@ -142,11 +143,7 @@ object PipelineQueries {
       |       ingest_order, customer_ref, amount
       |FROM r WHERE rn = 1 ORDER BY sale_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q17_clean_sales" -> q17CleanSales _,
-    "q18_dedup_latest" -> q18DedupLatest _)
-
-  def oracles: Map[String, String] = Map(
-    "q17_clean_sales" -> q17Sql,
-    "q18_dedup_latest" -> q18Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q17_clean_sales", q17CleanSales _, q17Sql),
+    Query("q18_dedup_latest", q18DedupLatest _, q18Sql))
 }

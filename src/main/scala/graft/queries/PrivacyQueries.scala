@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Privacy-release operators — what a training-data pipeline runs before
   * SHIPPING a dataset derived from user records (the reference's customer
   * table is the natural subject): k-anonymity accounting over a
@@ -176,11 +178,7 @@ object PrivacyQueries {
       |FROM grid GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
   // -------------------------------------------------------------- maps
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q448_k_anonymity" -> (q448KAnonymity _),
-    "q453_l_diversity" -> (q453LDiversity _))
-
-  def oracles: Map[String, String] = Map(
-    "q448_k_anonymity" -> q448Sql,
-    "q453_l_diversity" -> q453Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q448_k_anonymity", q448KAnonymity _, q448Sql),
+    Query("q453_l_diversity", q453LDiversity _, q453Sql))
 }

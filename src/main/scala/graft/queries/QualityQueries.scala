@@ -3,6 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+import graft.functions.ExactMath.r6
+
 /** Approximate functional-dependency discovery — the schema-level data
   * profiler that complements the value-level q82/q58 profiles: does
   * column A determine column B, and if not, how badly is the dependency
@@ -532,8 +535,6 @@ object QualityQueries {
             .as(s"t_${tag(qm, nm)}"))
       }
     val a = joined.agg(exprs.head, exprs.tail: _*)
-    def r6(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      round(c, 6) + lit(0.0)
     a.select(col("n_docs"), col("total_tokens"), expr(
         s"stack(${cells.length}, " + cells.map { case (qm, nm) =>
           s"${qm}D, ${nm}D, d_${tag(qm, nm)}, t_${tag(qm, nm)}"
@@ -633,7 +634,6 @@ object QualityQueries {
     val ranked = graft.plans.Eager.ckpt(graft.operators.RangeRank
       .withGlobalRank(joined, "rk", Seq(col("n_tokens"), col("doc_id"))))
     val n = ranked.agg(count(lit(1))).head().getLong(0)
-    def r6(c: org.apache.spark.sql.Column) = round(c, 6) + lit(0.0)
     ranked
       .groupBy((expr(s"((rk - 1) * 10) div $n") + 1L).as("length_decile"))
       .agg(count(lit(1)).as("n_docs"),
@@ -740,7 +740,6 @@ object QualityQueries {
     val medians = withR
       .filter(col("r") === expr("(nl + 1) div 2"))
       .select(col("lang"), col("avg_nll").as("lang_median"))
-    def r6(c: org.apache.spark.sql.Column) = round(c, 6) + lit(0.0)
     withR.join(broadcast(medians), "lang")
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
@@ -792,25 +791,14 @@ object QualityQueries {
       |FROM r JOIN med ON r.lang = med.lang
       |GROUP BY r.lang ORDER BY r.lang""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q431_gate_calibration" -> (q431GateCalibration _),
-    "q429_gate_length_bias" -> (q429GateLengthBias _),
-    "q424_gate_grid" -> (q424GateGrid _),
-    "q324_linenum_audit" -> (q324LinenumAudit _),
-    "q309_dq_scorecard" -> (q309DqScorecard _),
-    "q378_fk_integrity" -> (q378FkIntegrity _),
-    "q381_props_schema_audit" -> (q381PropsSchemaAudit _),
-    "q398_filter_overlap" -> (q398FilterOverlap _),
-    "q175_fd_audit" -> (q175FdAudit _))
-
-  def oracles: Map[String, String] = Map(
-    "q431_gate_calibration" -> q431Sql,
-    "q429_gate_length_bias" -> q429Sql,
-    "q424_gate_grid" -> q424Sql,
-    "q324_linenum_audit" -> q324Sql,
-    "q309_dq_scorecard" -> q309Sql,
-    "q378_fk_integrity" -> q378Sql,
-    "q381_props_schema_audit" -> q381Sql,
-    "q398_filter_overlap" -> q398Sql,
-    "q175_fd_audit" -> q175Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q431_gate_calibration", q431GateCalibration _, q431Sql),
+    Query("q429_gate_length_bias", q429GateLengthBias _, q429Sql),
+    Query("q424_gate_grid", q424GateGrid _, q424Sql),
+    Query("q324_linenum_audit", q324LinenumAudit _, q324Sql),
+    Query("q309_dq_scorecard", q309DqScorecard _, q309Sql),
+    Query("q378_fk_integrity", q378FkIntegrity _, q378Sql),
+    Query("q381_props_schema_audit", q381PropsSchemaAudit _, q381Sql),
+    Query("q398_filter_overlap", q398FilterOverlap _, q398Sql),
+    Query("q175_fd_audit", q175FdAudit _, q175Sql))
 }

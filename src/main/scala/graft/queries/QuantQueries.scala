@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.VectorFunctions._
 
 /** Scalar (int8) quantization for the embedding column — the 4×
@@ -228,11 +229,7 @@ object QuantQueries {
       |ORDER BY probe_id""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q163_sq8_recall" -> (q163Sq8Recall _),
-    "q176_mrl_recall" -> (q176MrlRecall _))
-
-  def oracles: Map[String, String] = Map(
-    "q163_sq8_recall" -> q163Sql,
-    "q176_mrl_recall" -> q176Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q163_sq8_recall", q163Sq8Recall _, q163Sql),
+    Query("q176_mrl_recall", q176MrlRecall _, q176Sql))
 }

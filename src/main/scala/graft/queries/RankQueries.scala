@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
+import graft.functions.ExactMath.r6
 import graft.functions.VectorFunctions.{dotD, dotSqlUnrolled, norm2}
 
 /** BM25 ranked retrieval over the `documents` table — the lexical-scoring
@@ -687,7 +689,6 @@ object RankQueries {
         .orderBy(col("g_bm25").desc, col("doc_id"))))
       .filter(col("rk") <= k)
       .select(col("doc_id"), col("g_bm25")))
-    def r6(c: org.apache.spark.sql.Column) = round(c, 6) + lit(0.0)
     val perS = shardCounts.map { s =>
       val withShard = tf.withColumn("shard", pmod(col("h"), lit(s.toLong)))
       val lStats = dl.select(pmod(col("h"), lit(s.toLong)).as("shard"),
@@ -797,21 +798,12 @@ object RankQueries {
       .replace("(HASHEXPR)", s"($h)")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q425_federated_idf" -> (q425FederatedIdf _),
-    "q321_rbo_overlap" -> (q321RboOverlap _),
-    "q296_ndcg_at10" -> (q296NdcgAt10 _),
-    "q237_bm25_stability" -> (q237Bm25Stability _),
-    "q78_bm25" -> (q78Bm25 _),
-    "q342_average_precision" -> (q342AveragePrecision _),
-    "q151_rrf_fusion" -> (q151RrfFusion _))
-
-  def oracles: Map[String, String] = Map(
-    "q425_federated_idf" -> q425Sql,
-    "q321_rbo_overlap" -> q321Sql,
-    "q296_ndcg_at10" -> q296Sql,
-    "q237_bm25_stability" -> q237Sql,
-    "q78_bm25" -> q78Sql,
-    "q342_average_precision" -> q342Sql,
-    "q151_rrf_fusion" -> q151Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q425_federated_idf", q425FederatedIdf _, q425Sql),
+    Query("q321_rbo_overlap", q321RboOverlap _, q321Sql),
+    Query("q296_ndcg_at10", q296NdcgAt10 _, q296Sql),
+    Query("q237_bm25_stability", q237Bm25Stability _, q237Sql),
+    Query("q78_bm25", q78Bm25 _, q78Sql),
+    Query("q342_average_precision", q342AveragePrecision _, q342Sql),
+    Query("q151_rrf_fusion", q151RrfFusion _, q151Sql))
 }

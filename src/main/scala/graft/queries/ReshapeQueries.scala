@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Reshaping and feature-engineering analytics: quantile binning, exact
   * correlation, pivoting, and period-over-period growth — the remaining
   * classics a warehouse user expects from an engine.
@@ -253,19 +255,11 @@ object ReshapeQueries {
       |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
       |ORDER BY o_custkey, order_seq""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q71_quartile_bins" -> (q71QuartileBins _),
-    "q72_exact_corr" -> (q72ExactCorr _),
-    "q73_daily_pivot" -> (q73DailyPivot _),
-    "q74_dod_growth" -> (q74DodGrowth _),
-    "q89_running_balance" -> (q89RunningBalance _),
-    "q91_unpivot_daily" -> (q91UnpivotDaily _))
-
-  def oracles: Map[String, String] = Map(
-    "q71_quartile_bins" -> q71Sql,
-    "q72_exact_corr" -> q72Sql,
-    "q73_daily_pivot" -> q73Sql,
-    "q74_dod_growth" -> q74Sql,
-    "q89_running_balance" -> q89Sql,
-    "q91_unpivot_daily" -> q91Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q71_quartile_bins", q71QuartileBins _, q71Sql),
+    Query("q72_exact_corr", q72ExactCorr _, q72Sql),
+    Query("q73_daily_pivot", q73DailyPivot _, q73Sql),
+    Query("q74_dod_growth", q74DodGrowth _, q74Sql),
+    Query("q89_running_balance", q89RunningBalance _, q89Sql),
+    Query("q91_unpivot_daily", q91UnpivotDaily _, q91Sql))
 }

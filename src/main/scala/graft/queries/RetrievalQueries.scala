@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions.{dotL, featureHashVec}
 
@@ -1439,27 +1440,15 @@ object RetrievalQueries {
       |ORDER BY ra.query_id""".stripMargin
 
   // -------------------------------------------------------------- maps
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q441_chunk_index" -> (q441ChunkIndex _),
-    "q442_passage_retrieval" -> (q442PassageRetrieval _),
-    "q443_semi_hard_triplets" -> (q443SemiHardTriplets _),
-    "q444_chunk_boilerplate" -> (q444ChunkBoilerplate _),
-    "q445_index_bucket_skew" -> (q445IndexBucketSkew _),
-    "q446_cdc_boilerplate" -> (q446CdcBoilerplate _),
-    "q447_banded_retrieval" -> (q447BandedRetrieval _),
-    "q451_multiprobe_retrieval" -> (q451MultiprobeRetrieval _),
-    "q452_index_decontam" -> (q452IndexDecontam _),
-    "q457_dedup_retrieval" -> (q457DedupRetrieval _))
-
-  def oracles: Map[String, String] = Map(
-    "q441_chunk_index" -> q441Sql,
-    "q442_passage_retrieval" -> q442Sql,
-    "q443_semi_hard_triplets" -> q443Sql,
-    "q444_chunk_boilerplate" -> q444Sql,
-    "q445_index_bucket_skew" -> q445Sql,
-    "q446_cdc_boilerplate" -> q446Sql,
-    "q447_banded_retrieval" -> q447Sql,
-    "q451_multiprobe_retrieval" -> q451Sql,
-    "q452_index_decontam" -> q452Sql,
-    "q457_dedup_retrieval" -> q457Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q441_chunk_index", q441ChunkIndex _, q441Sql),
+    Query("q442_passage_retrieval", q442PassageRetrieval _, q442Sql),
+    Query("q443_semi_hard_triplets", q443SemiHardTriplets _, q443Sql),
+    Query("q444_chunk_boilerplate", q444ChunkBoilerplate _, q444Sql),
+    Query("q445_index_bucket_skew", q445IndexBucketSkew _, q445Sql),
+    Query("q446_cdc_boilerplate", q446CdcBoilerplate _, q446Sql),
+    Query("q447_banded_retrieval", q447BandedRetrieval _, q447Sql),
+    Query("q451_multiprobe_retrieval", q451MultiprobeRetrieval _, q451Sql),
+    Query("q452_index_decontam", q452IndexDecontam _, q452Sql),
+    Query("q457_dedup_retrieval", q457DedupRetrieval _, q457Sql))
 }

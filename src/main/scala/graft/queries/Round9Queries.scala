@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.TextFunctions._
 import graft.operators.IncrementalDedup
 import graft.sink.Warehouse
@@ -669,29 +670,16 @@ object Round9Queries {
       |FROM wau JOIN roll USING (wk)
       |ORDER BY week_idx""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q107_rolling_wau" -> (q107RollingWau _),
-    "q105_revenue_anomalies" -> (q105RevenueAnomalies _),
-    "q106_fk_audit" -> (q106FkAudit _),
-    "q103_event_transitions" -> (q103EventTransitions _),
-    "q104_brand_bands" -> (q104BrandBands _),
-    "q102_partition_digest" -> (q102PartitionDigest _),
-    "q100_nation_volume" -> (q100NationVolume _),
-    "q95_big_orders" -> (q95BigOrders _),
-    "q96_host_stats" -> (q96HostStats _),
-    "q97_vocab_coverage" -> (q97VocabCoverage _),
-    "q98_minhash_store_dedup" -> (q98MinhashStoreDedup _))
-
-  def oracles: Map[String, String] = Map(
-    "q107_rolling_wau" -> q107Sql,
-    "q105_revenue_anomalies" -> q105Sql,
-    "q106_fk_audit" -> q106Sql,
-    "q103_event_transitions" -> q103Sql,
-    "q104_brand_bands" -> q104Sql,
-    "q102_partition_digest" -> q102Sql,
-    "q100_nation_volume" -> q100Sql,
-    "q95_big_orders" -> q95Sql,
-    "q96_host_stats" -> q96Sql,
-    "q97_vocab_coverage" -> q97Sql,
-    "q98_minhash_store_dedup" -> q98Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q107_rolling_wau", q107RollingWau _, q107Sql),
+    Query("q105_revenue_anomalies", q105RevenueAnomalies _, q105Sql),
+    Query("q106_fk_audit", q106FkAudit _, q106Sql),
+    Query("q103_event_transitions", q103EventTransitions _, q103Sql),
+    Query("q104_brand_bands", q104BrandBands _, q104Sql),
+    Query("q102_partition_digest", q102PartitionDigest _, q102Sql),
+    Query("q100_nation_volume", q100NationVolume _, q100Sql),
+    Query("q95_big_orders", q95BigOrders _, q95Sql),
+    Query("q96_host_stats", q96HostStats _, q96Sql),
+    Query("q97_vocab_coverage", q97VocabCoverage _, q97Sql),
+    Query("q98_minhash_store_dedup", q98MinhashStoreDedup _, q98Sql))
 }

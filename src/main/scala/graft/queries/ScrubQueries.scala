@@ -3,6 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+import graft.functions.ExactMath.r6
+
 /** PII detection + redaction — the scrubbing stage every production
   * training-data pipeline runs before anything else touches the text
   * (extension scope: the reference has no text operators at all).
@@ -313,7 +316,6 @@ object ScrubQueries {
         sum(least(col("c"), lit(b))).as(s"kept_$b"),
         sum(when(col("c") > b, 1L).otherwise(0L)).as(s"cl_$b")))
     val a = ud.agg(exprs.head, exprs.tail: _*)
-    def r6(c: Column): Column = round(c, 6) + lit(0.0)
     a.select(col("n_user_days"), col("max_contrib"), col("total_events"),
         expr(s"stack(${bounds.length}, " + bounds.map(b =>
           s"${b}L, kept_$b, cl_$b").mkString(", ") +
@@ -352,15 +354,9 @@ object ScrubQueries {
       |    / CAST(n_user_days AS DOUBLE), 6) + 0.0 AS clipped_share
       |FROM per ORDER BY clip_bound""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q311_k_anonymity" -> (q311KAnonymity _),
-    "q380_deletion_cost" -> (q380DeletionCost _),
-    "q405_contribution_clipping" -> (q405ContributionClipping _),
-    "q51_pii_scrub" -> q51PiiScrub _)
-
-  def oracles: Map[String, String] = Map(
-    "q311_k_anonymity" -> q311Sql,
-    "q380_deletion_cost" -> q380Sql,
-    "q405_contribution_clipping" -> q405Sql,
-    "q51_pii_scrub" -> q51Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q311_k_anonymity", q311KAnonymity _, q311Sql),
+    Query("q380_deletion_cost", q380DeletionCost _, q380Sql),
+    Query("q405_contribution_clipping", q405ContributionClipping _, q405Sql),
+    Query("q51_pii_scrub", q51PiiScrub _, q51Sql))
 }

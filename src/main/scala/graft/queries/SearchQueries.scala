@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.TextFunctions._
 
 /** Positional-index retrieval over the `documents` table — the exact
@@ -66,9 +67,6 @@ object SearchQueries {
       |WHERE p1.term = 'data'
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q167_phrase_search" -> (q167PhraseSearch _))
-
-  def oracles: Map[String, String] = Map(
-    "q167_phrase_search" -> q167Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q167_phrase_search", q167PhraseSearch _, q167Sql))
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Time-series regularization over the events stream: resample a sparse
   * event series onto a dense per-key hourly grid (gap-fill) and carry the
   * last observation forward across the gaps — the standard prep step
@@ -1795,34 +1797,34 @@ object SeriesQueries {
       |  -(b.nl) = 12 AS annual_dominant
       |FROM best ORDER BY nation""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q390_period_detect" -> (q390PeriodDetect _),
-    "q366_holt_winters" -> (q366HoltWinters _),
-    "q354_dtw_matrix" -> (q354DtwMatrix _),
-    "q317_hier_forecast" -> (q317HierForecast _),
-    "q303_permutation_entropy" -> (q303PermutationEntropy _),
-    "q301_peak_trailing_window" -> (q301PeakTrailingWindow _),
-    "q300_decomposition_strength" -> (q300DecompositionStrength _),
-    "q293_imr_chart" -> (q293ImrChart _),
-    "q288_max_drawdown" -> (q288MaxDrawdown _),
-    "q276_mase_backtest" -> (q276MaseBacktest _),
-    "q264_dispersion_index" -> (q264DispersionIndex _),
-    "q261_gumbel_maxima" -> (q261GumbelMaxima _),
-    "q197_crosscorr" -> (q197CrossCorrelation _),
-    "q148_seasonal_index" -> (q148SeasonalIndex _),
-    "q62_gap_fill" -> (q62GapFill _),
-    "q124_activity_streaks" -> (q124ActivityStreaks _),
-    "q125_ewma_revenue" -> (q125EwmaRevenue _),
-    "q130_autocorr_revenue" -> (q130AutocorrRevenue _),
-    "q169_cusum_changepoint" -> (q169CusumChangepoint _),
-    "q177_ar1_forecast" -> (q177Ar1Forecast _),
-    "q207_rolling_median" -> (q207RollingMedian _),
-    "q210_record_orders" -> (q210RecordOrders _),
-    "q212_weekday_anova" -> (q212WeekdayAnova _),
-    "q222_hurst_exponent" -> (q222HurstExponent _),
-    "q241_p_chart" -> (q241PChart _),
-    "q246_runs_test" -> (q246RunsTest _),
-    "q253_c_chart" -> (q253CChart _))
+  def queries: Seq[Query] = Seq(
+    Query("q390_period_detect", q390PeriodDetect _, q390Sql),
+    Query("q366_holt_winters", q366HoltWinters _, q366Sql),
+    Query("q354_dtw_matrix", q354DtwMatrix _, q354Sql),
+    Query("q317_hier_forecast", q317HierForecast _, q317Sql),
+    Query("q303_permutation_entropy", q303PermutationEntropy _, q303Sql),
+    Query("q301_peak_trailing_window", q301PeakTrailingWindow _, q301Sql),
+    Query("q300_decomposition_strength", q300DecompositionStrength _, q300Sql),
+    Query("q293_imr_chart", q293ImrChart _, q293Sql),
+    Query("q288_max_drawdown", q288MaxDrawdown _, q288Sql),
+    Query("q276_mase_backtest", q276MaseBacktest _, q276Sql),
+    Query("q264_dispersion_index", q264DispersionIndex _, q264Sql),
+    Query("q261_gumbel_maxima", q261GumbelMaxima _, q261Sql),
+    Query("q197_crosscorr", q197CrossCorrelation _, q197Sql),
+    Query("q148_seasonal_index", q148SeasonalIndex _, q148Sql),
+    Query("q62_gap_fill", q62GapFill _, q62Sql),
+    Query("q124_activity_streaks", q124ActivityStreaks _, q124Sql),
+    Query("q125_ewma_revenue", q125EwmaRevenue _, q125Sql),
+    Query("q130_autocorr_revenue", q130AutocorrRevenue _, q130Sql),
+    Query("q169_cusum_changepoint", q169CusumChangepoint _, q169Sql),
+    Query("q177_ar1_forecast", q177Ar1Forecast _, q177Sql),
+    Query("q207_rolling_median", q207RollingMedian _, q207Sql),
+    Query("q210_record_orders", q210RecordOrders _, q210Sql),
+    Query("q212_weekday_anova", q212WeekdayAnova _, q212Sql),
+    Query("q222_hurst_exponent", q222HurstExponent _, q222Sql),
+    Query("q241_p_chart", q241PChart _, q241Sql),
+    Query("q246_runs_test", q246RunsTest _, q246Sql),
+    Query("q253_c_chart", q253CChart _, q253Sql))
 
   // --------------------------------------------------------------- q253
   /** c-chart for daily error-event counts: Shewhart limits c̄ ± 3√c̄
@@ -2396,33 +2398,4 @@ object SeriesQueries {
       |  CAST(ls[(len(ls) + 1) // 2] + ls[len(ls) // 2 + 1] AS DOUBLE) / 2.0
       |    AS rolling_med_7d
       |FROM win ORDER BY ship_day""".stripMargin
-
-  def oracles: Map[String, String] = Map(
-    "q354_dtw_matrix" -> q354Sql,
-    "q366_holt_winters" -> q366Sql,
-    "q390_period_detect" -> q390Sql,
-    "q317_hier_forecast" -> q317Sql,
-    "q303_permutation_entropy" -> q303Sql,
-    "q301_peak_trailing_window" -> q301Sql,
-    "q300_decomposition_strength" -> q300Sql,
-    "q293_imr_chart" -> q293Sql,
-    "q288_max_drawdown" -> q288Sql,
-    "q276_mase_backtest" -> q276Sql,
-    "q264_dispersion_index" -> q264Sql,
-    "q261_gumbel_maxima" -> q261Sql,
-    "q197_crosscorr" -> q197Sql,
-    "q148_seasonal_index" -> q148Sql,
-    "q62_gap_fill" -> q62Sql,
-    "q124_activity_streaks" -> q124Sql,
-    "q125_ewma_revenue" -> q125Sql,
-    "q130_autocorr_revenue" -> q130Sql,
-    "q169_cusum_changepoint" -> q169Sql,
-    "q177_ar1_forecast" -> q177Sql,
-    "q207_rolling_median" -> q207Sql,
-    "q210_record_orders" -> q210Sql,
-    "q212_weekday_anova" -> q212Sql,
-    "q222_hurst_exponent" -> q222Sql,
-    "q241_p_chart" -> q241Sql,
-    "q246_runs_test" -> q246Sql,
-    "q253_c_chart" -> q253Sql)
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Gap-based sessionization over the events stream table — the classic
   * behavioral-analytics operator. Batch formulation: per user, a new
   * session starts when the gap to the previous event exceeds the
@@ -1430,41 +1432,22 @@ object SessionQueries {
       |CROSS JOIN fullv f CROSS JOIN tot t
       |ORDER BY p.channel""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q348_shapley_attribution" -> (q348ShapleyAttribution _),
-    "q334_session_paths" -> (q334SessionPaths _),
-    "q312_markov_attribution" -> (q312MarkovAttribution _),
-    "q292_activity_streaks" -> (q292ActivityStreaks _),
-    "q287_behavioral_entropy" -> (q287BehavioralEntropy _),
-    "q279_cooccurrence_lift" -> (q279CooccurrenceLift _),
-    "q220_session_mrr" -> (q220SessionMrr _),
-    "q214_markov_stationary" -> (q214MarkovStationary _),
-    "q34_sessions" -> q34Sessions _,
-    "q377_gap_calibration" -> (q377GapCalibration _),
-    "q382_watermark_calibration" -> (q382WatermarkCalibration _),
-    "q388_stream_state_budget" -> (q388StreamStateBudget _),
-    "q128_event_3paths" -> (q128Event3Paths _),
-    "q131_peak_concurrency" -> (q131PeakConcurrency _),
-    "q182_interarrival_fit" -> (q182InterarrivalFit _),
-    "q194_circadian_profile" -> (q194CircadianProfile _),
-    "q200_bounce_rate" -> (q200BounceRate _))
-
-  def oracles: Map[String, String] = Map(
-    "q348_shapley_attribution" -> q348Sql,
-    "q334_session_paths" -> q334Sql,
-    "q312_markov_attribution" -> q312Sql,
-    "q292_activity_streaks" -> q292Sql,
-    "q287_behavioral_entropy" -> q287Sql,
-    "q279_cooccurrence_lift" -> q279Sql,
-    "q220_session_mrr" -> q220Sql,
-    "q214_markov_stationary" -> q214Sql,
-    "q34_sessions" -> q34Sql,
-    "q377_gap_calibration" -> q377Sql,
-    "q382_watermark_calibration" -> q382Sql,
-    "q388_stream_state_budget" -> q388Sql,
-    "q128_event_3paths" -> q128Sql,
-    "q131_peak_concurrency" -> q131Sql,
-    "q182_interarrival_fit" -> q182Sql,
-    "q194_circadian_profile" -> q194Sql,
-    "q200_bounce_rate" -> q200Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q348_shapley_attribution", q348ShapleyAttribution _, q348Sql),
+    Query("q334_session_paths", q334SessionPaths _, q334Sql),
+    Query("q312_markov_attribution", q312MarkovAttribution _, q312Sql),
+    Query("q292_activity_streaks", q292ActivityStreaks _, q292Sql),
+    Query("q287_behavioral_entropy", q287BehavioralEntropy _, q287Sql),
+    Query("q279_cooccurrence_lift", q279CooccurrenceLift _, q279Sql),
+    Query("q220_session_mrr", q220SessionMrr _, q220Sql),
+    Query("q214_markov_stationary", q214MarkovStationary _, q214Sql),
+    Query("q34_sessions", q34Sessions _, q34Sql),
+    Query("q377_gap_calibration", q377GapCalibration _, q377Sql),
+    Query("q382_watermark_calibration", q382WatermarkCalibration _, q382Sql),
+    Query("q388_stream_state_budget", q388StreamStateBudget _, q388Sql),
+    Query("q128_event_3paths", q128Event3Paths _, q128Sql),
+    Query("q131_peak_concurrency", q131PeakConcurrency _, q131Sql),
+    Query("q182_interarrival_fit", q182InterarrivalFit _, q182Sql),
+    Query("q194_circadian_profile", q194CircadianProfile _, q194Sql),
+    Query("q200_bounce_rate", q200BounceRate _, q200Sql))
 }

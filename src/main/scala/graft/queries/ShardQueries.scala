@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+import graft.functions.ExactMath.r6
 import graft.functions.TextFunctions.{md5Hash60, md5Hash60Sql}
 
 /** Shard-assignment audits — the placement layer under every distributed
@@ -1155,7 +1157,6 @@ object ShardQueries {
         sum(when(pmod(pmod(col("h"), lit(t)), lit(16L)) ===
           pmod(col("h"), lit(16L)), 1L).otherwise(0L)).as(s"sp_$t")))
     val a = li.agg(exprs.head, exprs.tail: _*)
-    def r6(c: Column): Column = round(c, 6) + lit(0.0)
     a.select(col("n"), expr(s"stack(${targets.length}, " +
         targets.map(t => s"${t}L, mv_$t, sp_$t, " +
           s"${1.0 - 16.0 / lcm(16L, t)}D").mkString(", ") +
@@ -1242,7 +1243,6 @@ object ShardQueries {
           col("est_bytes"), lit(scales).as("scales_with_sf"))
     }
     val base = tables.map { case (t, s) => one(t, s) }.reduce(_ unionAll _)
-    def r6(c: Column): Column = round(c, 6) + lit(0.0)
     base.select(col("table_name"), col("n_rows"), col("est_bytes"),
         r6(col("est_bytes").cast("double") / col("n_rows").cast("double"))
           .as("bytes_per_row"),
@@ -1333,7 +1333,6 @@ object ShardQueries {
         "l_suppkey", "l_orderkey")),
       ("select_star", fields.map(_.name)))
     val full = fields.map(f => s"b_${f.name}").mkString(" + ")
-    def r6(c: Column): Column = round(c, 6) + lit(0.0)
     a.select(col("n"), expr(s"($full)").as("bytes_full"), expr(
         s"stack(${classes.length}, " + classes.map { case (nm, cs) =>
           s"'$nm', ${cs.size}L, (${cs.map(c => s"b_$c").mkString(" + ")})"
@@ -1394,31 +1393,17 @@ object ShardQueries {
       |    / CAST(bytes_full AS DOUBLE), 6) + 0.0 AS saving_share
       |FROM s ORDER BY access_pattern""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q426_projection_ledger" -> (q426ProjectionLedger _),
-    "q420_broadcast_ledger" -> (q420BroadcastLedger _),
-    "q415_bucket_resize" -> (q415BucketResize _),
-    "q385_bucket_skew_advisor" -> (q385BucketSkewAdvisor _),
-    "q383_cache_hit_curve" -> (q383CacheHitCurve _),
-    "q376_sortedness_audit" -> (q376SortednessAudit _),
-    "q365_encoding_plan" -> (q365EncodingPlan _),
-    "q297_shard_stability" -> (q297ShardStability _),
-    "q355_zorder_skip" -> (q355ZorderSkip _),
-    "q359_compaction_plan" -> (q359CompactionPlan _),
-    "q361_layout_drift" -> (q361LayoutDrift _),
-    "q363_bloom_skip" -> (q363BloomSkip _))
-
-  def oracles: Map[String, String] = Map(
-    "q426_projection_ledger" -> q426Sql,
-    "q420_broadcast_ledger" -> q420Sql,
-    "q415_bucket_resize" -> q415Sql,
-    "q385_bucket_skew_advisor" -> q385Sql,
-    "q383_cache_hit_curve" -> q383Sql,
-    "q376_sortedness_audit" -> q376Sql,
-    "q365_encoding_plan" -> q365Sql,
-    "q297_shard_stability" -> q297Sql,
-    "q355_zorder_skip" -> q355Sql,
-    "q359_compaction_plan" -> q359Sql,
-    "q361_layout_drift" -> q361Sql,
-    "q363_bloom_skip" -> q363Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q426_projection_ledger", q426ProjectionLedger _, q426Sql),
+    Query("q420_broadcast_ledger", q420BroadcastLedger _, q420Sql),
+    Query("q415_bucket_resize", q415BucketResize _, q415Sql),
+    Query("q385_bucket_skew_advisor", q385BucketSkewAdvisor _, q385Sql),
+    Query("q383_cache_hit_curve", q383CacheHitCurve _, q383Sql),
+    Query("q376_sortedness_audit", q376SortednessAudit _, q376Sql),
+    Query("q365_encoding_plan", q365EncodingPlan _, q365Sql),
+    Query("q297_shard_stability", q297ShardStability _, q297Sql),
+    Query("q355_zorder_skip", q355ZorderSkip _, q355Sql),
+    Query("q359_compaction_plan", q359CompactionPlan _, q359Sql),
+    Query("q361_layout_drift", q361LayoutDrift _, q361Sql),
+    Query("q363_bloom_skip", q363BloomSkip _, q363Sql))
 }

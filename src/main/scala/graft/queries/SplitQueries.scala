@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
+import graft.functions.ExactMath.r6
+
 /** Consistent train/val/test splitting and mixture-weighted sampling —
   * the dataset-composition primitives of a training-data pipeline.
   * Extension scope (no reference twin; the reference has no notion of
@@ -883,7 +886,6 @@ object SplitQueries {
       s"stack(${mls.length}, " + mls.map(ml =>
         s"${ml}L, tr_$ml, pd_$ml").mkString(", ") +
         ") as (max_len, tokens_truncated, pad_tokens)"))
-    def r6(c: Column): Column = round(c, 6) + lit(0.0)
     stacked
       .withColumn("n_seqs_packed",
         expr("(total_tokens + max_len - 1) div max_len"))
@@ -1097,7 +1099,6 @@ object SplitQueries {
     val a = perStride.foldLeft(lens) { case (df, (s, l)) =>
         df.withColumn(s"ls_$s", l)
       }.agg(exprs.head, exprs.tail: _*)
-    def r6(c: Column): Column = round(c, 6) + lit(0.0)
     a.select(col("n_docs"), col("total_tokens"), expr(
         s"stack(${strides.length}, " + strides.map(s =>
           s"${s}L, ch_$s, pd_$s, dp_$s").mkString(", ") +
@@ -1188,7 +1189,6 @@ object SplitQueries {
     }.reduce(_ unionAll _)
     val base = perB.filter(col("n_buckets") === 1L)
       .select(col("pad_tokens").as("pad_base"))
-    def r6(c: Column): Column = round(c, 6) + lit(0.0)
     perB.crossJoin(broadcast(base))
       .select(col("n_buckets"), col("n_docs"), col("total_tokens"),
         col("pad_tokens"),
@@ -1278,7 +1278,6 @@ object SplitQueries {
       .groupBy(col("policy"))
       .agg(sum(when(col("max_tr").isNotNull && col("ts") < col("max_tr"),
         1L).otherwise(0L)).as("causal_leaks"))
-    def r6(c: Column): Column = round(c, 6) + lit(0.0)
     census.groupBy(col("policy"))
       .agg(sum(col("n_tr")).as("n_train"), sum(col("n_te")).as("n_test"),
         count(lit(1)).as("n_users"),
@@ -1365,7 +1364,6 @@ object SplitQueries {
     val u = spark.read.parquet(s"$dir/documents.parquet")
       .groupBy(col("lang"))
       .agg(sum(tokenCount(col("text")).cast("long")).as("u_tokens"))
-    def r6(c: Column): Column = round(c, 6) + lit(0.0)
     u.select(col("lang"), col("u_tokens"),
         expr("stack(5, 1L, 2L, 4L, 8L, 16L) as (epochs)"))
       .withColumn("raw_tokens", col("u_tokens") * col("epochs"))
@@ -1431,7 +1429,6 @@ object SplitQueries {
       .filter(col("n") > 0)
     val pos = graft.plans.Eager.ckpt(graft.operators.RangeRank
       .withRunningSum(lens, col("n"), "cum", Seq(col("doc_id"))))
-    def r6(c: Column): Column = round(c, 6) + lit(0.0)
     val perL = ls.map { l =>
       val seqs = pos
         .withColumn("first_seq", expr(s"(cum - n) div $l"))
@@ -1505,51 +1502,35 @@ object SplitQueries {
       |FROM split s JOIN cross_c c ON s.max_len = c.max_len
       |ORDER BY s.max_len""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q422_packing_contamination" -> (q422PackingContamination _),
-    "q421_epoch_decay" -> (q421EpochDecay _),
-    "q419_split_design" -> (q419SplitDesign _),
-    "q410_bucket_batching" -> (q410BucketBatching _),
-    "q407_chunking_ledger" -> (q407ChunkingLedger _),
-    "q399_neardup_leakage" -> (q399NearDupLeakage _),
-    "q395_packing_curve" -> (q395PackingCurve _),
-    "q373_temperature_mix" -> (q373TemperatureMix _),
-    "q433_mixture_cert" -> (q433MixtureCert _),
-    "q439_mixture_delta" -> (q439MixtureDelta _),
-    "q307_water_filling" -> (q307WaterFilling _),
-    "q217_oov_rate" -> (q217OovRate _),
-    "q52_mixture_sample" -> q52MixtureSample _,
-    "q181_split_leakage" -> (q181SplitLeakage _),
-    "q46_split_census" -> ((spark: SparkSession, dir: String) => {
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"), col("lang"), col("text"))
-        .withColumn("split", splitFor(col("doc_id").cast("string")))
-      val census = docs.groupBy("lang", "split")
-        .agg(count(lit(1)).as("n_docs"),
-          (sum(length(col("text"))).cast("double") / count(lit(1)))
-            .as("avg_chars"))
-      census
-        .withColumn("frac", col("n_docs").cast("double") /
-          sum("n_docs").over(Window.partitionBy("lang")))
-        .orderBy("lang", "split")
-    }))
-
-  def oracles: Map[String, String] = Map(
-    "q422_packing_contamination" -> q422Sql,
-    "q421_epoch_decay" -> q421Sql,
-    "q419_split_design" -> q419Sql,
-    "q410_bucket_batching" -> q410Sql,
-    "q407_chunking_ledger" -> q407Sql,
-    "q399_neardup_leakage" -> q399Sql,
-    "q395_packing_curve" -> q395Sql,
-    "q373_temperature_mix" -> q373Sql,
-    "q433_mixture_cert" -> q433Sql,
-    "q439_mixture_delta" -> q439Sql,
-    "q307_water_filling" -> q307Sql,
-    "q217_oov_rate" -> q217Sql,
-    "q52_mixture_sample" -> q52Sql,
-    "q181_split_leakage" -> q181Sql,
-    "q46_split_census" ->
+  def queries: Seq[Query] = Seq(
+    Query("q422_packing_contamination", q422PackingContamination _, q422Sql),
+    Query("q421_epoch_decay", q421EpochDecay _, q421Sql),
+    Query("q419_split_design", q419SplitDesign _, q419Sql),
+    Query("q410_bucket_batching", q410BucketBatching _, q410Sql),
+    Query("q407_chunking_ledger", q407ChunkingLedger _, q407Sql),
+    Query("q399_neardup_leakage", q399NearDupLeakage _, q399Sql),
+    Query("q395_packing_curve", q395PackingCurve _, q395Sql),
+    Query("q373_temperature_mix", q373TemperatureMix _, q373Sql),
+    Query("q433_mixture_cert", q433MixtureCert _, q433Sql),
+    Query("q439_mixture_delta", q439MixtureDelta _, q439Sql),
+    Query("q307_water_filling", q307WaterFilling _, q307Sql),
+    Query("q217_oov_rate", q217OovRate _, q217Sql),
+    Query("q52_mixture_sample", q52MixtureSample _, q52Sql),
+    Query("q181_split_leakage", q181SplitLeakage _, q181Sql),
+    Query("q46_split_census",
+      ((spark: SparkSession, dir: String) => {
+        val docs = spark.read.parquet(s"$dir/documents.parquet")
+          .select(col("doc_id"), col("lang"), col("text"))
+          .withColumn("split", splitFor(col("doc_id").cast("string")))
+        val census = docs.groupBy("lang", "split")
+          .agg(count(lit(1)).as("n_docs"),
+            (sum(length(col("text"))).cast("double") / count(lit(1)))
+              .as("avg_chars"))
+        census
+          .withColumn("frac", col("n_docs").cast("double") /
+            sum("n_docs").over(Window.partitionBy("lang")))
+          .orderBy("lang", "split")
+      }),
       """WITH d AS (
         |  SELECT lang, length(text) AS chars,
         |    CASE WHEN substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 2) < 'cc'
@@ -1564,5 +1545,5 @@ object SplitQueries {
         |  FROM d GROUP BY 1, 2)
         |SELECT lang, split, n_docs, avg_chars,
         |  CAST(n_docs AS DOUBLE) / SUM(n_docs) OVER (PARTITION BY lang) AS frac
-        |FROM census ORDER BY lang, split""".stripMargin)
+        |FROM census ORDER BY lang, split""".stripMargin))
 }

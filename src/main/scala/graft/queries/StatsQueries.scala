@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Grouped statistical modeling over the event stream: closed-form OLS
   * trend fitting and robust (median/MAD) outlier detection — the two
   * monitoring primitives a pipeline runs on its own telemetry.
@@ -1591,51 +1593,27 @@ object StatsQueries {
       |  sum_cents <= 922337203685 AS fits_int64_100tb
       |FROM s ORDER BY column_name""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q423_overflow_headroom" -> (q423OverflowHeadroom _),
-    "q323_winsorized_mean" -> (q323WinsorizedMean _),
-    "q319_key_fragmentation" -> (q319KeyFragmentation _),
-    "q302_mad_outliers" -> (q302MadOutliers _),
-    "q280_simpson_screen" -> (q280SimpsonScreen _),
-    "q274_price_dispersion" -> (q274PriceDispersion _),
-    "q271_negbin_fit" -> (q271NegbinFit _),
-    "q258_hill_tail_index" -> (q258HillTailIndex _),
-    "q249_newsvendor" -> (q249Newsvendor _),
-    "q231_fd_binning" -> (q231FdBinning _),
-    "q225_spearman" -> (q225Spearman _),
-    "q223_exact_percentiles" -> (q223ExactPercentiles _),
-    "q196_equidepth_hist" -> (q196EquidepthHist _),
-    "q199_discount_elasticity" -> (q199DiscountElasticity _),
-    "q144_theilsen_trend" -> (q144TheilsenTrend _),
-    "q149_weighted_median_qty" -> (q149WeightedMedianQty _),
-    "q69_trend_fit" -> (q69TrendFit _),
-    "q70_mad_outliers" -> (q70MadOutliers _),
-    "q84_equiwidth_hist" -> (q84EquiwidthHist _),
-    "q117_quantile_sketch_cert" -> (q117QuantileSketchCert _),
-    "q127_nation_order_stats" -> (q127NationOrderStats _),
-    "q178_trimmed_mean" -> (q178TrimmedMean _))
-
-  def oracles: Map[String, String] = Map(
-    "q423_overflow_headroom" -> q423Sql,
-    "q323_winsorized_mean" -> q323Sql,
-    "q319_key_fragmentation" -> q319Sql,
-    "q302_mad_outliers" -> q302Sql,
-    "q280_simpson_screen" -> q280Sql,
-    "q274_price_dispersion" -> q274Sql,
-    "q271_negbin_fit" -> q271Sql,
-    "q258_hill_tail_index" -> q258Sql,
-    "q249_newsvendor" -> q249Sql,
-    "q231_fd_binning" -> q231Sql,
-    "q225_spearman" -> q225Sql,
-    "q223_exact_percentiles" -> q223Sql,
-    "q144_theilsen_trend" -> q144Sql,
-    "q149_weighted_median_qty" -> q149Sql,
-    "q69_trend_fit" -> q69Sql,
-    "q70_mad_outliers" -> q70Sql,
-    "q84_equiwidth_hist" -> q84Sql,
-    "q117_quantile_sketch_cert" -> q117Sql,
-    "q127_nation_order_stats" -> q127Sql,
-    "q178_trimmed_mean" -> q178Sql,
-    "q196_equidepth_hist" -> q196Sql,
-    "q199_discount_elasticity" -> q199Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q423_overflow_headroom", q423OverflowHeadroom _, q423Sql),
+    Query("q323_winsorized_mean", q323WinsorizedMean _, q323Sql),
+    Query("q319_key_fragmentation", q319KeyFragmentation _, q319Sql),
+    Query("q302_mad_outliers", q302MadOutliers _, q302Sql),
+    Query("q280_simpson_screen", q280SimpsonScreen _, q280Sql),
+    Query("q274_price_dispersion", q274PriceDispersion _, q274Sql),
+    Query("q271_negbin_fit", q271NegbinFit _, q271Sql),
+    Query("q258_hill_tail_index", q258HillTailIndex _, q258Sql),
+    Query("q249_newsvendor", q249Newsvendor _, q249Sql),
+    Query("q231_fd_binning", q231FdBinning _, q231Sql),
+    Query("q225_spearman", q225Spearman _, q225Sql),
+    Query("q223_exact_percentiles", q223ExactPercentiles _, q223Sql),
+    Query("q196_equidepth_hist", q196EquidepthHist _, q196Sql),
+    Query("q199_discount_elasticity", q199DiscountElasticity _, q199Sql),
+    Query("q144_theilsen_trend", q144TheilsenTrend _, q144Sql),
+    Query("q149_weighted_median_qty", q149WeightedMedianQty _, q149Sql),
+    Query("q69_trend_fit", q69TrendFit _, q69Sql),
+    Query("q70_mad_outliers", q70MadOutliers _, q70Sql),
+    Query("q84_equiwidth_hist", q84EquiwidthHist _, q84Sql),
+    Query("q117_quantile_sketch_cert", q117QuantileSketchCert _, q117Sql),
+    Query("q127_nation_order_stats", q127NationOrderStats _, q127Sql),
+    Query("q178_trimmed_mean", q178TrimmedMean _, q178Sql))
 }

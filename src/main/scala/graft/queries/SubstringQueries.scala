@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.TextFunctions._
 
 /** Corpus SUBSTRING-level dedup (VERDICT r13 #6 — the last uncovered
@@ -760,19 +761,11 @@ object SubstringQueries {
       |JOIN lens l ON b.doc_id = l.doc_id
       |ORDER BY b.doc_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q350_substring_dedup" -> (q350SubstringDedup _),
-    "q351_removal_mask" -> (q351RemovalMask _),
-    "q352_contam_spans" -> (q352ContamSpans _),
-    "q392_rewrite_cert" -> (q392RewriteCert _),
-    "q393_self_repeats" -> (q393SelfRepeats _),
-    "q404_bench_leaks" -> (q404BenchLeaks _))
-
-  def oracles: Map[String, String] = Map(
-    "q350_substring_dedup" -> q350Sql,
-    "q351_removal_mask" -> q351Sql,
-    "q352_contam_spans" -> q352Sql,
-    "q392_rewrite_cert" -> q392Sql,
-    "q393_self_repeats" -> q393Sql,
-    "q404_bench_leaks" -> q404Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q350_substring_dedup", q350SubstringDedup _, q350Sql),
+    Query("q351_removal_mask", q351RemovalMask _, q351Sql),
+    Query("q352_contam_spans", q352ContamSpans _, q352Sql),
+    Query("q392_rewrite_cert", q392RewriteCert _, q392Sql),
+    Query("q393_self_repeats", q393SelfRepeats _, q393Sql),
+    Query("q404_bench_leaks", q404BenchLeaks _, q404Sql))
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.Query
+
 /** Corpus-level TF-IDF term ranking over the `documents` table — the
   * "what characterizes each language's corpus slice" primitive a
   * training-data pipeline uses for corpus diagnostics and keyword-based
@@ -129,47 +131,44 @@ object TermQueries {
       |JOIN norms nb ON nb.doc_id = d.a + 100000
       |ORDER BY doc_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q195_tfidf_pair_cosine" -> (q195TfidfPairCosine _),
-    "q44_tfidf_terms" -> ((spark: SparkSession, dir: String) => {
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"), col("lang"), col("text"))
-      val perDoc = docs
-        .select(col("doc_id"), col("lang"),
-          explode(split(col("text"), " ")).as("term"))
-        .filter(length(col("term")) > 0)
-        .groupBy("doc_id", "lang", "term")
-        .agg(count(lit(1)).as("occ"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val dfTbl = perDoc.groupBy("term").agg(count(lit(1)).as("df"))
-      val tfTbl = perDoc.groupBy("lang", "term").agg(sum("occ").as("tf"))
-      val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-      val scored = tfTbl
-        .join(dfTbl, "term")
-        .crossJoin(broadcast(nDocs))
-        .withColumn("score", round(
-          col("tf").cast("double") *
-            log(col("n_docs").cast("double") / col("df").cast("double")), 6))
-      val w = Window.partitionBy("lang")
-        .orderBy(col("score").desc, col("term"))
-      // Eager top-k materialization (3 rows per lang) lets perDoc be
-      // unpersisted here — CacheManager pins persist() entries strongly,
-      // so returning a lazy plan over perDoc would retain the exploded
-      // token table for the JVM's lifetime.
-      val out = scored
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select(col("lang"), col("term"), col("tf"), col("df"),
-          col("score"), col("rank"))
-        .orderBy("lang", "rank")
-        .localCheckpoint(true)
-      perDoc.unpersist()
-      out
-    }))
-
-  def oracles: Map[String, String] = Map(
-    "q195_tfidf_pair_cosine" -> q195Sql,
-    "q44_tfidf_terms" ->
+  def queries: Seq[Query] = Seq(
+    Query("q195_tfidf_pair_cosine", q195TfidfPairCosine _, q195Sql),
+    Query("q44_tfidf_terms",
+      ((spark: SparkSession, dir: String) => {
+        val docs = spark.read.parquet(s"$dir/documents.parquet")
+          .select(col("doc_id"), col("lang"), col("text"))
+        val perDoc = docs
+          .select(col("doc_id"), col("lang"),
+            explode(split(col("text"), " ")).as("term"))
+          .filter(length(col("term")) > 0)
+          .groupBy("doc_id", "lang", "term")
+          .agg(count(lit(1)).as("occ"))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        val dfTbl = perDoc.groupBy("term").agg(count(lit(1)).as("df"))
+        val tfTbl = perDoc.groupBy("lang", "term").agg(sum("occ").as("tf"))
+        val nDocs = docs.agg(count(lit(1)).as("n_docs"))
+        val scored = tfTbl
+          .join(dfTbl, "term")
+          .crossJoin(broadcast(nDocs))
+          .withColumn("score", round(
+            col("tf").cast("double") *
+              log(col("n_docs").cast("double") / col("df").cast("double")), 6))
+        val w = Window.partitionBy("lang")
+          .orderBy(col("score").desc, col("term"))
+        // Eager top-k materialization (3 rows per lang) lets perDoc be
+        // unpersisted here — CacheManager pins persist() entries strongly,
+        // so returning a lazy plan over perDoc would retain the exploded
+        // token table for the JVM's lifetime.
+        val out = scored
+          .withColumn("rank", row_number().over(w))
+          .filter(col("rank") <= 3)
+          .select(col("lang"), col("term"), col("tf"), col("df"),
+            col("score"), col("rank"))
+          .orderBy("lang", "rank")
+          .localCheckpoint(true)
+        perDoc.unpersist()
+        out
+      }),
       """WITH tok AS (
         |  SELECT doc_id, lang, unnest(string_split(text, ' ')) AS term
         |  FROM documents
@@ -194,5 +193,5 @@ object TermQueries {
         |  FROM scored
         |)
         |SELECT lang, term, tf, df, score, rank
-        |FROM ranked WHERE rank <= 3 ORDER BY lang, rank""".stripMargin)
+        |FROM ranked WHERE rank <= 3 ORDER BY lang, rank""".stripMargin))
 }

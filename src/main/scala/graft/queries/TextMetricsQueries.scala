@@ -3,6 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+import graft.functions.ExactMath.r6
+
 /** Corpus readability telemetry — the syllable-level cousin of q23's
   * quality scores and q31's token counts: vowel-group syllable counting
   * feeding a Flesch-style reading-ease summary per language. Curation
@@ -123,7 +126,6 @@ object TextMetricsQueries {
     * no window, no join; |langs| output rows. q20/q31's shape. */
   def q394TokenizerFertility(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextFunctions.tokenCount
-    def r6(c: Column): Column = round(c, 6) + lit(0.0)
     spark.read.parquet(s"$dir/documents.parquet")
       .select(col("lang"),
         tokenCount(col("text")).cast("long").as("ws"),
@@ -175,11 +177,7 @@ object TextMetricsQueries {
       |    + 0.0 AS chars_per_ws_token
       |FROM agg ORDER BY lang""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q170_readability" -> (q170Readability _),
-    "q394_tokenizer_fertility" -> (q394TokenizerFertility _))
-
-  def oracles: Map[String, String] = Map(
-    "q170_readability" -> q170Sql,
-    "q394_tokenizer_fertility" -> q394Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q170_readability", q170Readability _, q170Sql),
+    Query("q394_tokenizer_fertility", q394TokenizerFertility _, q394Sql))
 }

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Second batch of TPC-H-shape analytics (companions to [[TpchQueries]]
   * q67/q68): the returned-item report and the promo-revenue ratio — the
   * two remaining classic shapes this schema supports directly. (The
@@ -100,11 +102,7 @@ object Tpch2Queries {
       |WHERE CAST(l_shipdate AS DATE) >= DATE '1997-09-01'
       |  AND CAST(l_shipdate AS DATE) < DATE '1997-10-01'""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q76_returned_items" -> (q76ReturnedItems _),
-    "q77_promo_revenue" -> (q77PromoRevenue _))
-
-  def oracles: Map[String, String] = Map(
-    "q76_returned_items" -> q76Sql,
-    "q77_promo_revenue" -> q77Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q76_returned_items", q76ReturnedItems _, q76Sql),
+    Query("q77_promo_revenue", q77PromoRevenue _, q77Sql))
 }

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Third batch of TPC-H-shape analytics — the remaining classic shapes
   * this schema supports directly (no partsupp table and no
   * l_shipmode/l_receiptdate; round 12's [[Tpch6Queries]] later covered
@@ -236,17 +238,10 @@ object Tpch3Queries {
       |  AND l_discount >= 0.05 AND l_discount <= 0.07
       |  AND l_quantity < 24.0""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q108_small_qty_revenue" -> (q108SmallQtyRevenue _),
-    "q109_top_supplier" -> (q109TopSupplier _),
-    "q110_idle_customers" -> (q110IdleCustomers _),
-    "q113_top_parts_per_nation" -> (q113TopPartsPerNation _),
-    "q120_forecast_revenue" -> (q120ForecastRevenue _))
-
-  def oracles: Map[String, String] = Map(
-    "q108_small_qty_revenue" -> q108Sql,
-    "q109_top_supplier" -> q109Sql,
-    "q110_idle_customers" -> q110Sql,
-    "q113_top_parts_per_nation" -> q113Sql,
-    "q120_forecast_revenue" -> q120Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q108_small_qty_revenue", q108SmallQtyRevenue _, q108Sql),
+    Query("q109_top_supplier", q109TopSupplier _, q109Sql),
+    Query("q110_idle_customers", q110IdleCustomers _, q110Sql),
+    Query("q113_top_parts_per_nation", q113TopPartsPerNation _, q113Sql),
+    Query("q120_forecast_revenue", q120ForecastRevenue _, q120Sql))
 }

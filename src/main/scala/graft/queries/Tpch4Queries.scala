@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Fourth batch of TPC-H-shape analytics: Q8 (national market share —
   * the canonical ROLE-PLAYING dimension query: nation joins the fact
   * twice under two different roles) and Q13 (customer order-count
@@ -140,11 +142,7 @@ object Tpch4Queries {
       |FROM per_cust GROUP BY 1
       |ORDER BY custdist DESC, c_count DESC""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q121_market_share" -> (q121MarketShare _),
-    "q122_order_count_dist" -> (q122OrderCountDist _))
-
-  def oracles: Map[String, String] = Map(
-    "q121_market_share" -> q121Sql,
-    "q122_order_count_dist" -> q122Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q121_market_share", q121MarketShare _, q121Sql),
+    Query("q122_order_count_dist", q122OrderCountDist _, q122Sql))
 }

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Fifth TPC-H batch: Q7 (volume shipping — the two-sided role-playing
   * join where BOTH trading partners come from the same dimension and
   * the predicate couples them) and a Q9-shape profit rollup (nation ×
@@ -186,13 +188,8 @@ object Tpch5Queries {
       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q132_volume_shipping" -> (q132VolumeShipping _),
-    "q133_nation_profit" -> (q133NationProfit _),
-    "q145_leadtime_percentiles" -> (q145LeadtimePercentiles _))
-
-  def oracles: Map[String, String] = Map(
-    "q132_volume_shipping" -> q132Sql,
-    "q133_nation_profit" -> q133Sql,
-    "q145_leadtime_percentiles" -> q145Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q132_volume_shipping", q132VolumeShipping _, q132Sql),
+    Query("q133_nation_profit", q133NationProfit _, q133Sql),
+    Query("q145_leadtime_percentiles", q145LeadtimePercentiles _, q145Sql))
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Sixth TPC-H batch — the five query SHAPES the suite did not yet cover:
   * Q2 (correlated-min subquery → per-group argmin), Q11 (HAVING against a
   * scalar-subquery total), Q16 (NOT-IN exclusion + COUNT DISTINCT rollup),
@@ -385,21 +387,12 @@ object Tpch6Queries {
       |WHERE l_shipdate > o_orderdate + INTERVAL 180 DAY
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q155_mincost_supplier" -> (q155MincostSupplier _),
-    "q156_important_parts" -> (q156ImportantParts _),
-    "q157_supplier_part_counts" -> (q157SupplierPartCounts _),
-    "q158_dominant_suppliers" -> (q158DominantSuppliers _),
-    "q159_sole_late_supplier" -> (q159SoleLateSupplier _),
-    "q164_late_priority_dist" -> (q164LatePriorityDist _),
-    "q165_mode_priority" -> (q165ModePriority _))
-
-  def oracles: Map[String, String] = Map(
-    "q155_mincost_supplier" -> q155Sql,
-    "q156_important_parts" -> q156Sql,
-    "q157_supplier_part_counts" -> q157Sql,
-    "q158_dominant_suppliers" -> q158Sql,
-    "q159_sole_late_supplier" -> q159Sql,
-    "q164_late_priority_dist" -> q164Sql,
-    "q165_mode_priority" -> q165Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q155_mincost_supplier", q155MincostSupplier _, q155Sql),
+    Query("q156_important_parts", q156ImportantParts _, q156Sql),
+    Query("q157_supplier_part_counts", q157SupplierPartCounts _, q157Sql),
+    Query("q158_dominant_suppliers", q158DominantSuppliers _, q158Sql),
+    Query("q159_sole_late_supplier", q159SoleLateSupplier _, q159Sql),
+    Query("q164_late_priority_dist", q164LatePriorityDist _, q164Sql),
+    Query("q165_mode_priority", q165ModePriority _, q165Sql))
 }

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Seventh TPC-H batch — the last two query SHAPES the suite had not yet
   * covered: Q18 (HAVING-filtered aggregate driving a top-level join back
   * to its parent dimensions) and Q19 (a disjunction of brand/size/quantity
@@ -107,11 +109,7 @@ object Tpch7Queries {
       |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15
       |       AND l_quantity BETWEEN 20 AND 30)""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q289_large_orders" -> (q289LargeOrders _),
-    "q290_disjunct_revenue" -> (q290DisjunctRevenue _))
-
-  def oracles: Map[String, String] = Map(
-    "q289_large_orders" -> q289Sql,
-    "q290_disjunct_revenue" -> q290Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q289_large_orders", q289LargeOrders _, q289Sql),
+    Query("q290_disjunct_revenue", q290DisjunctRevenue _, q290Sql))
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Classic TPC-H-shape multi-way join analytics over the star schema —
   * the join-planning stress tests every warehouse engine is measured by.
   * The value at 100 TB is in the PLAN: selective dimension filters reach
@@ -527,23 +529,13 @@ object TpchQueries {
       |  CAST(MAX_BY(backlog, d) AS BIGINT) AS closing
       |FROM census GROUP BY 1 ORDER BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q318_order_backlog" -> (q318OrderBacklog _),
-    "q282_shipment_spread" -> (q282ShipmentSpread _),
-    "q266_wilson_reliability" -> (q266WilsonReliability _),
-    "q248_rank_stability" -> (q248RankStability _),
-    "q67_shipping_priority" -> (q67ShippingPriority _),
-    "q68_local_supplier_volume" -> (q68LocalSupplierVolume _),
-    "q188_supplier_hhi" -> (q188SupplierHhi _),
-    "q202_dead_stock" -> (q202DeadStock _))
-
-  def oracles: Map[String, String] = Map(
-    "q318_order_backlog" -> q318Sql,
-    "q282_shipment_spread" -> q282Sql,
-    "q266_wilson_reliability" -> q266Sql,
-    "q248_rank_stability" -> q248Sql,
-    "q67_shipping_priority" -> q67Sql,
-    "q68_local_supplier_volume" -> q68Sql,
-    "q188_supplier_hhi" -> q188Sql,
-    "q202_dead_stock" -> q202Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q318_order_backlog", q318OrderBacklog _, q318Sql),
+    Query("q282_shipment_spread", q282ShipmentSpread _, q282Sql),
+    Query("q266_wilson_reliability", q266WilsonReliability _, q266Sql),
+    Query("q248_rank_stability", q248RankStability _, q248Sql),
+    Query("q67_shipping_priority", q67ShippingPriority _, q67Sql),
+    Query("q68_local_supplier_volume", q68LocalSupplierVolume _, q68Sql),
+    Query("q188_supplier_hhi", q188SupplierHhi _, q188Sql),
+    Query("q202_dead_stock", q202DeadStock _, q202Sql))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.VectorFunctions._
 import graft.operators.KMeans
 
@@ -151,9 +152,6 @@ object VectorPipeline {
       |ORDER BY stage_no""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q275_vector_store_ledger" -> (q275VectorStoreLedger _))
-
-  def oracles: Map[String, String] = Map(
-    "q275_vector_store_ledger" -> q275Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q275_vector_store_ledger", q275VectorStoreLedger _, q275Sql))
 }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.TextFunctions.{md5Hash60, md5Hash60Sql}
 
 /** Synthetic sales generator (reference `dags/src/generator.py:7-43`,
@@ -108,9 +109,6 @@ object Generator {
        |FROM vals GROUP BY cust_prefix ORDER BY cust_prefix""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q30_synthetic_sales" -> q30SyntheticSales _)
-
-  def oracles: Map[String, String] = Map(
-    "q30_synthetic_sales" -> q30Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q30_synthetic_sales", q30SyntheticSales _, q30Sql))
 }

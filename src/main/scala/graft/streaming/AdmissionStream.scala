@@ -46,12 +46,16 @@ object AdmissionStream {
   val QualityMin = 0.5
   val NllMax = 8.0
 
+  /** q352's tokenizer (TextFunctions.tokens over lower): trim, lower,
+    * split on whitespace; whitespace-only → empty. Shared with
+    * [[ContamStream]] and [[CurationGateStream]]. */
   private[graft] def tokenize(text: String): Array[String] = {
     val t = text.trim.toLowerCase
     if (t.isEmpty) Array.empty else t.split("\\s+")
   }
 
-  private def md5Hex(s: String): String = {
+  /** Spark md5(): lowercase hex of the UTF-8 digest. */
+  private[streaming] def md5Hex(s: String): String = {
     val d = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8"))
     val sb = new StringBuilder(32)
@@ -59,8 +63,9 @@ object AdmissionStream {
     sb.toString
   }
 
-  /** Spark `round(x, n)` image (HALF_UP through decimal); shared with
-    * the composed live gate ([[CurationGateStream]]). */
+  /** Spark `round(x, n)` image (HALF_UP through decimal — the Sessionize
+    * idiom; math.round(v·10ⁿ) diverges near .5 edges); shared with the
+    * other streaming twins. */
   private[streaming] def snap(v: Double, n: Int): Double =
     java.math.BigDecimal.valueOf(v)
       .setScale(n, java.math.RoundingMode.HALF_UP).doubleValue()

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.queries.Kpis
 
 /** Click→purchase attribution — the canonical STREAM-STREAM join: match
@@ -69,9 +70,6 @@ object Attribution {
       | AND p.s > c.s AND p.s <= c.s + 1800
       |ORDER BY 1, 2, 3""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q75_attribution" -> (q75Attribution _))
-
-  def oracles: Map[String, String] = Map(
-    "q75_attribution" -> q75Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q75_attribution", q75Attribution _, q75Sql))
 }

@@ -73,12 +73,6 @@ object CellStream {
     acc
   }
 
-  /** Spark `round(x, 6)`: canonical decimal image, HALF_UP (the
-    * Sessionize idiom — math.round(v·1e6) diverges near .5 edges). */
-  private def round6(v: Double): Double =
-    java.math.BigDecimal.valueOf(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-
   /** Admission stream over a frame with (kind: 'seed'|'live', vec_id,
     * embedding array&lt;float&gt;). `centroids` is the frozen (cell id,
     * centroid) codebook — k rows, collected from the store at query
@@ -134,7 +128,8 @@ object CellStream {
             if (admitLive && n == 0L)
               members = Member(v.vec_id, v.embedding, v.n2) :: members
             Admission(v.vec_id, cell, n, bestId,
-              if (seen) round6(bestCos) + 0.0 else 0.0, n > 0L)
+              if (seen) AdmissionStream.snap(bestCos, 6) + 0.0 else 0.0,
+              n > 0L)
           }
           if (members.nonEmpty) state.update(CellMembers(members))
           out.iterator

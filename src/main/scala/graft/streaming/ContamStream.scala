@@ -31,26 +31,11 @@ import graft.queries.SubstringQueries.{BF, K, L}
   * closure cost; each document's work is O(tokens × ≤BF probe hits),
   * linear per batch with zero shuffle and zero state. */
 object ContamStream {
+  import AdmissionStream.{md5Hex, snap, tokenize}
 
   final case class DocIn(doc_id: Long, text: String)
   final case class Contam(doc_id: Long, n_tokens: Long, n_regions: Long,
       contam_tokens: Long, longest_contam_tokens: Long, contam_frac: Double)
-
-  /** q352's tokenizer (TextFunctions.tokens over lower): trim, lower,
-    * split on whitespace; whitespace-only → empty. */
-  private[graft] def tokenize(text: String): Array[String] = {
-    val t = text.trim.toLowerCase
-    if (t.isEmpty) Array.empty else t.split("\\s+")
-  }
-
-  /** Spark md5(): lowercase hex of the UTF-8 digest. */
-  private def md5Hex(s: String): String = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8"))
-    val sb = new StringBuilder(32)
-    d.foreach(b => sb.append(f"${b & 0xff}%02x"))
-    sb.toString
-  }
 
   private def shingleFps(toks: Array[String]): Array[String] =
     Array.tabulate(toks.length - K + 1)(i =>
@@ -76,11 +61,6 @@ object ContamStream {
         fp -> hits.map(_._2).sortBy(identity)
       }
   }
-
-  /** Spark `round(x, 6)` image (the Sessionize HALF_UP idiom). */
-  private def round6(v: Double): Double =
-    java.math.BigDecimal.valueOf(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** Maximal matched runs ((start, end, runLenShingles) in positions) of
     * `toks` against the frozen index — q352's per-(bench, diagonal)
@@ -149,7 +129,7 @@ object ContamStream {
             nRegions += 1; covered += re - rs + 1
             Iterator.single(Contam(d.doc_id, toks.length.toLong, nRegions,
               covered, longest.toLong,
-              round6(covered.toDouble / toks.length.toDouble) + 0.0))
+              snap(covered.toDouble / toks.length.toDouble, 6) + 0.0))
           }
         }
       }

@@ -4,8 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
+import graft.Query
 import graft.functions.TextFunctions
 import graft.operators.{BandStore, IncrementalDedup}
+import graft.plans.Overlap
 import graft.queries.Kpis
 
 /** The composed LIVE curation pipeline (VERDICT r16 #1) — every
@@ -238,48 +240,28 @@ object CurationGateStream {
 
     // the four artifact builds and the arrivals materialization are five
     // mutually independent jobs over the one corpus checkpoint, so they
-    // overlap on a small thread pool (guide §2.6 — actions are only
-    // sequential because the driver calls them sequentially): each job's
-    // task tail and driver-side gaps (two collects, four write commits)
-    // stop idling the cores the next job wants. Measured isolated at
-    // sf0.1: 8.4–8.9 s sequential → 7.1–8.6 s overlapped (the pool, not
-    // the shared checkpoint, carries the win — the sequential-with-ckpt
-    // control measured 8.7–9.3). Results are byte-identical — the same
-    // five jobs, just concurrent.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
-    def submit[T](f: => T): java.util.concurrent.Future[T] =
-      pool.submit(new java.util.concurrent.Callable[T] {
-        def call(): T = f
-      })
-    // ExecutionException is unwrapped so failures surface as the
-    // original exception (the sequential contract), and the finally
-    // uses shutdownNow() so an early failure best-effort-cancels the
-    // remaining in-flight builds instead of leaving them detached
-    // (r17 ADVICE).
-    def getU[T](f: java.util.concurrent.Future[T]): T =
-      try f.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
-      }
-    val (lp, floor, contamIdx, arrivals) =
-      try {
-        val fLm = submit(
-          AdmissionStream.lmIndex(body.select(col("doc_id"), col("toks"))))
-        val fContam = submit(
-          ContamStream.benchIndex(bench.select(col("doc_id"), col("text"))))
-        val fFp = submit(IncrementalDedup.writeStore(
-          body.select(TextFunctions.fingerprint(col("text")).as("fp")),
-          fpTable, s"$tmp/$fpTable"))
-        val fBand = submit(BandStore.writeStore(
-          body.select(col("doc_id"),
-            array_join(col("toks"), " ").as("text")),
-          bandTable, s"$tmp/$bandTable"))
-        val fArr = submit(arrivalsPlan.localCheckpoint(true))
-        val lmRes = getU(fLm)
-        val contamRes = getU(fContam)
-        getU(fFp); getU(fBand)
-        (lmRes._1, lmRes._2, contamRes, getU(fArr))
-      } finally { pool.shutdownNow(); () }
+    // overlap through nested Overlap.two calls (guide §2.6 — actions are
+    // only sequential because the driver calls them sequentially): each
+    // job's task tail and driver-side gaps (two collects, four write
+    // commits) stop idling the cores the next job wants. Measured isolated
+    // at sf0.1: 8.4–8.9 s sequential → 7.1–8.6 s overlapped (the overlap,
+    // not the shared checkpoint, carries the win — the
+    // sequential-with-ckpt control measured 8.7–9.3). Results are
+    // byte-identical — the same five jobs, just concurrent.
+    val (((lp, floor), contamIdx), (_, arrivals)) = Overlap.two(
+      Overlap.two(
+        AdmissionStream.lmIndex(body.select(col("doc_id"), col("toks"))),
+        ContamStream.benchIndex(bench.select(col("doc_id"), col("text")))),
+      Overlap.two(
+        Overlap.two(
+          IncrementalDedup.writeStore(
+            body.select(TextFunctions.fingerprint(col("text")).as("fp")),
+            fpTable, s"$tmp/$fpTable"),
+          BandStore.writeStore(
+            body.select(col("doc_id"),
+              array_join(col("toks"), " ").as("text")),
+            bandTable, s"$tmp/$bandTable")),
+        arrivalsPlan.localCheckpoint(true)))
 
     verdicts(arrivals, lp, floor, contamIdx, spark.table(fpTable),
       spark.table(BandStore.bandsTable(bandTable)),
@@ -426,9 +408,6 @@ object CurationGateStream {
        |ORDER BY q.doc_id""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q437_live_gate_replay" -> (q437LiveGateReplay _))
-
-  def oracles: Map[String, String] = Map(
-    "q437_live_gate_replay" -> q437Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q437_live_gate_replay", q437LiveGateReplay _, q437Sql))
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.SubstringQueries
-import graft.streaming.ContamStream
+import graft.streaming.{AdmissionStream, ContamStream}
 import graft.streaming.ContamStream.DocIn
 
 /** Streaming contamination gate: replaying the corpus through
@@ -30,7 +30,7 @@ class ContamStreamSpec extends AnyFunSuite {
     val lives = docs.filter(_._1 % 10 != 7).map { case (id, text) =>
       benchText.get(id + 4) match {
         case Some(bt) =>
-          val extra = ContamStream.tokenize(bt).take(30).mkString(" ")
+          val extra = AdmissionStream.tokenize(bt).take(30).mkString(" ")
           DocIn(id, text + " " + extra)
         case None => DocIn(id, text)
       }

@@ -129,7 +129,7 @@ class DupClustersSpec extends AnyFunSuite {
   }
 
   test("q45 equals a brute-force all-pairs closure computed independently") {
-    val out = DupClusters.queries("q45_dup_clusters")(spark, sfDir)
+    val out = SparkEntry.queries("q45_dup_clusters")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
     // independent ground truth: collect the tiny derived corpus, all-pairs

@@ -88,7 +88,7 @@ class Round8Spec extends AnyFunSuite {
   }
 
   test("q80 plan broadcasts the rank-vector side, no cartesian product") {
-    val df = PageRank.queries("q80_pagerank")(spark, sfDir)
+    val df = SparkEntry.queries("q80_pagerank")(spark, sfDir)
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), s"cartesian in:\n$plan")
     val rows = df.collect()

@@ -62,7 +62,7 @@ class SequencePackSpec extends AnyFunSuite {
   }
 
   test("q47: tokens are conserved and streams pack independently") {
-    val out = SequencePack.queries("q47_sequence_pack")(spark, sfDir)
+    val out = SparkEntry.queries("q47_sequence_pack")(spark, sfDir)
     val rows = out.collect()
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     assert(rows.length == docs.count())

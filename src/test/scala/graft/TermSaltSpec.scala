@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Salting
-import graft.queries.{SplitQueries, TermQueries}
+import graft.queries.SplitQueries
 
 /** q43 salted aggregation and q44 TF-IDF: result equivalence with the
   * straightforward single-stage formulations, plan shape, and invariants. */
@@ -12,7 +12,7 @@ class TermSaltSpec extends AnyFunSuite {
   import SparkTestSession.{spark, sfDir}
 
   test("q43: salted two-stage sum equals the plain groupBy") {
-    val salted = Salting.queries("q43_salted_sum")(spark, sfDir).collect()
+    val salted = SparkEntry.queries("q43_salted_sum")(spark, sfDir).collect()
     val plain = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag")
       .agg(sum(col("l_quantity").cast("decimal(18,4)")).cast("double")
@@ -23,7 +23,7 @@ class TermSaltSpec extends AnyFunSuite {
   }
 
   test("q43: plan regroup is two aggregation layers, no extra shuffle of raw rows") {
-    val df = Salting.queries("q43_salted_sum")(spark, sfDir)
+    val df = SparkEntry.queries("q43_salted_sum")(spark, sfDir)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     // stage 1 groups on (key, salt), stage 2 on key — both hash aggregates
@@ -49,7 +49,7 @@ class TermSaltSpec extends AnyFunSuite {
   }
 
   test("q44: tf-idf output invariants (rank bounds, df consistency, score math)") {
-    val out = TermQueries.queries("q44_tfidf_terms")(spark, sfDir).collect()
+    val out = SparkEntry.queries("q44_tfidf_terms")(spark, sfDir).collect()
     assert(out.nonEmpty)
     val langs = out.map(_.getString(0)).distinct
     // top-3 per lang, ranks 1..3, unique per lang
@@ -78,7 +78,7 @@ class TermSaltSpec extends AnyFunSuite {
       (3L, "fr", "beta beta beta")).toDF("doc_id", "lang", "text")
     val dir = java.nio.file.Files.createTempDirectory("tfidf").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = TermQueries.queries("q44_tfidf_terms")(spark, dir)
+    val out = SparkEntry.queries("q44_tfidf_terms")(spark, dir)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3))).toSet
     // alpha: df=2 (docs 1,2) even though it occurs 3 times; en tf(alpha)=3
@@ -105,7 +105,7 @@ class TermSaltSpec extends AnyFunSuite {
   }
 
   test("q46: census fractions sum to 1 within each lang") {
-    val out = SplitQueries.queries("q46_split_census")(spark, sfDir).collect()
+    val out = SparkEntry.queries("q46_split_census")(spark, sfDir).collect()
     assert(out.nonEmpty)
     out.groupBy(_.getString(0)).foreach { case (lang, rows) =>
       val total = rows.map(_.getDouble(4)).sum

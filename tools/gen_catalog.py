@@ -1,10 +1,10 @@
 #!/usr/bin/env python3
 """Generate the per-module query catalog for README.md (driver-side tooling).
 
-Scans every main-source module for registered query keys ("qNNN_key" -> ...)
-inside its `queries` map, pairs each with the first sentence of the Scaladoc
-block that precedes the implementing def, and prints a markdown section with
-one table per module: | query | one-line purpose |.
+Scans every main-source module for registered queries (`Query("qNNN_key", ...`
+entries in its `queries` registry), pairs each with the first sentence of the
+Scaladoc block that precedes the implementing def, and prints a markdown
+section with one table per module: | query | one-line purpose |.
 
 Heuristic for the one-liner: take the Scaladoc of the def whose body hosts the
 query (located via the `// ---- qNNN` banner or the def name), strip markup,
@@ -14,7 +14,7 @@ import os, re, sys, glob
 
 ROOT = os.path.join(os.path.dirname(__file__), "..", "src", "main", "scala", "graft")
 
-KEY_RE = re.compile(r'"(q\d+_[a-z0-9_]+)"\s*->')
+KEY_RE = re.compile(r'Query\("(q\d+_[a-z0-9_]+)"')
 
 
 def first_sentence(doc: str) -> str:
@@ -37,14 +37,8 @@ def first_sentence(doc: str) -> str:
 
 def scan(path: str):
     src = open(path).read()
-    # keys registered in this file's `queries` map (dedup, keep order)
-    keys = []
-    for m in KEY_RE.finditer(src):
-        k = m.group(1)
-        # only count the `queries` map side: the oracle map repeats keys,
-        # so dedupe
-        if k not in keys:
-            keys.append(k)
+    # keys registered in this file's `queries` registry
+    keys = KEY_RE.findall(src)
     if not keys:
         return None
     # index scaladoc blocks by the qNNN banner that follows them
