@@ -50,21 +50,28 @@ object Clean {
   /** trim + `"nan"`→NULL for one string column (`processor.py:59-61`). */
   def scrub(c: Column): Column = nullif(trim(c), lit("nan"))
 
-  /** The typed coercion of one already-scrubbed frame; no dedup. Keeps any
-    * non-required columns (e.g. the ingest-order tiebreak) untouched. */
-  def coerce(df: DataFrame): DataFrame = {
+  /** Scrub every string column and coerce `sale_date`, `quantity` and
+    * `amount` from their scrubbed values, as one projection that keeps the
+    * input's column order; no row is dropped yet. */
+  private def coerced(df: DataFrame): DataFrame = {
     val stringCols = df.schema.fields
       .filter(f => f.dataType == StringType).map(_.name).toSet
-    val scrubbed = df.columns.foldLeft(df)((d, c) =>
-      if (stringCols(c)) d.withColumn(c, scrub(col(c))) else d)
-    scrubbed
-      .withColumn("sale_date", expr("try_to_timestamp(sale_date)"))
-      .withColumn("quantity",
-        coalesce(expr("try_cast(try_cast(quantity AS double) AS int)"), lit(1)))
-      .withColumn("amount",
-        coalesce(expr("try_cast(amount AS double)"), lit(0.0)))
-      .filter(col("sale_id").isNotNull)
+    def scrubbed(c: String): Column = if (stringCols(c)) scrub(col(c)) else col(c)
+    val typed = Map(
+      "sale_date" -> try_to_timestamp(scrubbed("sale_date")),
+      "quantity" ->
+        coalesce(scrubbed("quantity").try_cast("double").try_cast("int"), lit(1)),
+      "amount" -> coalesce(scrubbed("amount").try_cast("double"), lit(0.0)))
+    df.select(df.columns.toIndexedSeq.map(c =>
+      typed.getOrElse(c, scrubbed(c)).as(c)): _*)
   }
+
+  private val hasKey = col("sale_id").isNotNull
+
+  /** The typed coercion of one frame, then the null-key filter; no dedup.
+    * Keeps any non-required columns (e.g. the ingest-order tiebreak)
+    * untouched. */
+  def coerce(df: DataFrame): DataFrame = coerced(df).filter(hasKey)
 
   /** Dedup by `sale_id`, keep latest `sale_date`, deterministic tiebreak on
     * ingest order (SURVEY §2.4; reference `processor.py:73-77`).
@@ -96,13 +103,14 @@ object Clean {
     * scrub → coerce → drop null keys → dedup keep-latest → final projection
     * in warehouse column order. Input is an all-string frame from [[Readers]];
     * a `_ingest_order` column is added here if absent. */
-  def cleanSales(df: DataFrame, dedup: Boolean = true): DataFrame = {
-    val ordered =
-      if (df.columns.contains(IngestOrder)) df else withIngestOrder(df)
-    val coerced = coerce(ensureRequired(ordered))
-    val deduped = if (dedup) dedupLatest(coerced) else coerced
-    deduped.select(required.map(col): _*)
-  }
+  def cleanSales(df: DataFrame, dedup: Boolean = true): DataFrame =
+    finish(coerce(prepared(df)), dedup)
+
+  private def prepared(df: DataFrame): DataFrame =
+    ensureRequired(if (df.columns.contains(IngestOrder)) df else withIngestOrder(df))
+
+  private def finish(df: DataFrame, dedup: Boolean): DataFrame =
+    (if (dedup) dedupLatest(df) else df).select(required.map(col): _*)
 
   /** cleanSales with drop-count observability (the reference logs
     * "Dropped %d rows missing sale_id", `processor.py:69-71`). Metrics ride
@@ -111,27 +119,12 @@ object Clean {
     * and `rows_null_key` (dropped = rows_null_key; dedup removals =
     * rows_in - rows_null_key - output count). */
   def cleanSalesObserved(df: DataFrame, obs: org.apache.spark.sql.Observation,
-                         dedup: Boolean = true): DataFrame = {
-    val ordered =
-      if (df.columns.contains(IngestOrder)) df else withIngestOrder(df)
-    val prepared = ensureRequired(ordered)
-    val stringCols = prepared.schema.fields
-      .filter(_.dataType == StringType).map(_.name).toSet
-    val scrubbed = prepared.columns.foldLeft(prepared)((d, c) =>
-      if (stringCols(c)) d.withColumn(c, scrub(col(c))) else d)
-    val observed = scrubbed.observe(obs,
-      count(lit(1)).as("rows_in"),
-      count(when(col("sale_id").isNull, 1)).as("rows_null_key"))
-    val coerced = observed
-      .withColumn("sale_date", expr("try_to_timestamp(sale_date)"))
-      .withColumn("quantity",
-        coalesce(expr("try_cast(try_cast(quantity AS double) AS int)"), lit(1)))
-      .withColumn("amount",
-        coalesce(expr("try_cast(amount AS double)"), lit(0.0)))
-      .filter(col("sale_id").isNotNull)
-    val deduped = if (dedup) dedupLatest(coerced) else coerced
-    deduped.select(required.map(col): _*)
-  }
+                         dedup: Boolean = true): DataFrame =
+    finish(coerced(prepared(df))
+      .observe(obs,
+        count(lit(1)).as("rows_in"),
+        count(when(col("sale_id").isNull, 1)).as("rows_null_key"))
+      .filter(hasKey), dedup)
 
   /** Typed view of the cleaned frame: downstream code that wants
     * compile-time field access works on `Dataset[Sale]` (the post-clean

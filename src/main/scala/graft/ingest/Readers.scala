@@ -31,14 +31,20 @@ object Readers {
   /** JSON: array form (`[...]`) as multiLine, else NDJSON — the reference
     * sniffs the first non-blank line (`processor.py:24-33`). primitives kept
     * as strings so coercion stays centralized in Clean. */
-  def readJson(spark: SparkSession, path: String): DataFrame = {
-    val isArray = Detect.firstNonWsChar(
-      path, spark.sparkContext.hadoopConfiguration).contains('[')
+  def readJson(spark: SparkSession, path: String): DataFrame =
+    readJson(spark, path, isJsonArray(spark, path))
+
+  /** [[readJson]] for a caller that already sniffed the form. */
+  def readJson(spark: SparkSession, path: String, array: Boolean): DataFrame = {
     val base = spark.read.option("primitivesAsString", "true")
-    val df = if (isArray) base.option("multiLine", "true").json(path)
+    val df = if (array) base.option("multiLine", "true").json(path)
              else base.json(path)
     normalizeColumns(df)
   }
+
+  /** Array-form JSON: the first non-blank character is `[`. */
+  def isJsonArray(spark: SparkSession, path: String): Boolean =
+    Detect.firstNonWsChar(path, spark.sparkContext.hadoopConfiguration).contains('[')
 
   /** Parquet read, then cast every column to string — parquet carries its own
     * types (`processor.py:34-35` reads them natively) but stringifying here

@@ -5,7 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.util.control.NonFatal
 
-import graft.ingest.{Clean, Readers, Schemas, Validate}
+import graft.ingest.{Clean, Schemas, Validate}
+import graft.plans.Eager
 import graft.sink.AuditLog
 
 /** The ingestion pipeline's routing + audit state machine (reference
@@ -90,48 +91,45 @@ object Router {
     ensure(spark, bucket)
     val outcomes = listIncoming(spark, bucket).map { name =>
       val path = s"${bucket.incoming}/$name"
-      val v = Validate.validate(spark, path)
-      if (!v.valid) {
-        audit.log(Schemas.AuditEntry(name, bucket.base, "validation_failed",
-          Some(0L), Some(v.error)))
-        move(spark, path, bucket.failed("validation_failed"))
-        FileOutcome(name, "validation_failed", 0L, Some(v.error))
-      } else {
-        audit.log(Schemas.AuditEntry(name, bucket.base, "validated", None, None))
-        // ---- process stage (read → clean → dedup), retries handled by
-        // Spark task retry inside the actions; stage failure → quarantine.
-        val cleanedOrErr =
-          try {
-            // cache: the count here and the load below would otherwise
-            // each re-read and re-clean the file
-            val df = Clean.cleanSales(Readers.readAllString(spark, path)).cache()
-            val n = df.count()
-            Right((df, n))
-          } catch { case NonFatal(e) => Left(e) }
-        cleanedOrErr match {
-          case Left(e) =>
-            audit.log(Schemas.AuditEntry(name, bucket.base, "processing_failed",
-              Some(0L), Some(String.valueOf(e.getMessage))))
-            move(spark, path, bucket.failed("processing_failed"))
-            FileOutcome(name, "processing_failed", 0L, Some(String.valueOf(e.getMessage)))
-          case Right((cleaned, nRows)) =>
-            audit.log(Schemas.AuditEntry(name, bucket.base, "processed",
-              Some(nRows), None))
-            // ---- load stage
-            try {
-              val loaded = load(cleaned)
-              move(spark, path, bucket.processed)
-              audit.log(Schemas.AuditEntry(name, bucket.base, "loaded",
-                Some(loaded), None))
-              FileOutcome(name, "loaded", loaded, None)
-            } catch {
-              case NonFatal(e) =>
-                audit.log(Schemas.AuditEntry(name, bucket.base, "load_failed",
-                  Some(0L), Some(String.valueOf(e.getMessage))))
-                move(spark, path, bucket.failed("loading_failed"))
-                FileOutcome(name, "load_failed", 0L, Some(String.valueOf(e.getMessage)))
-            } finally cleaned.unpersist()
-        }
+      Validate.check(spark, path) match {
+        case Left(error) =>
+          audit.log(Schemas.AuditEntry(name, bucket.base, "validation_failed",
+            Some(0L), Some(error)))
+          move(spark, path, bucket.failed("validation_failed"))
+          FileOutcome(name, "validation_failed", 0L, Some(error))
+        case Right(raw) =>
+          audit.log(Schemas.AuditEntry(name, bucket.base, "validated", None, None))
+          // ---- process stage (clean → dedup of the frame validation read),
+          // materialised once: the checkpoint's job also yields the row
+          // count, and the load reads the checkpoint instead of the file.
+          // Retries are Spark task retries; a stage failure → quarantine.
+          val cleanedOrErr =
+            try Right(Eager.ckptCounted(Clean.cleanSales(raw)))
+            catch { case NonFatal(e) => Left(e) }
+          cleanedOrErr match {
+            case Left(e) =>
+              audit.log(Schemas.AuditEntry(name, bucket.base, "processing_failed",
+                Some(0L), Some(String.valueOf(e.getMessage))))
+              move(spark, path, bucket.failed("processing_failed"))
+              FileOutcome(name, "processing_failed", 0L, Some(String.valueOf(e.getMessage)))
+            case Right((cleaned, nRows)) =>
+              audit.log(Schemas.AuditEntry(name, bucket.base, "processed",
+                Some(nRows), None))
+              // ---- load stage
+              try {
+                val loaded = load(cleaned)
+                move(spark, path, bucket.processed)
+                audit.log(Schemas.AuditEntry(name, bucket.base, "loaded",
+                  Some(loaded), None))
+                FileOutcome(name, "loaded", loaded, None)
+              } catch {
+                case NonFatal(e) =>
+                  audit.log(Schemas.AuditEntry(name, bucket.base, "load_failed",
+                    Some(0L), Some(String.valueOf(e.getMessage))))
+                  move(spark, path, bucket.failed("loading_failed"))
+                  FileOutcome(name, "load_failed", 0L, Some(String.valueOf(e.getMessage)))
+              }
+          }
       }
     }
     RunReport(outcomes)

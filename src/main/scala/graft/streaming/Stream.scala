@@ -9,6 +9,7 @@ import org.apache.spark.sql.types._
 import scala.util.control.NonFatal
 
 import graft.ingest.{Clean, Readers, Schemas}
+import graft.plans.Eager
 
 /** Incremental ingest as Structured Streaming (SURVEY §2.6 T1–T5): the
   * reference's 30 s `PythonSensor` poll + cron micro-batch + per-file task
@@ -74,8 +75,8 @@ object Stream {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val cleaned = Clean.cleanSales(batch.drop("_source_file"))
         try {
-          val n = cleaned.count()
-          load(cleaned)
+          val (materialised, n) = Eager.ckptCounted(cleaned)
+          load(materialised)
           results += BatchResult(batchId, n, quarantined = false)
         } catch {
           case NonFatal(_) =>
@@ -143,8 +144,8 @@ object Stream {
         val files = batch.select("path").collect().map(_.getString(0)).sorted
         files.foreach { f =>
           try {
-            val cleaned = Clean.cleanSales(Readers.readAllString(spark, f))
-            val n = cleaned.count()
+            val (cleaned, n) =
+              Eager.ckptCounted(Clean.cleanSales(Readers.readAllString(spark, f)))
             load(cleaned)
             results += FileResult(f, n, quarantined = false)
           } catch {
