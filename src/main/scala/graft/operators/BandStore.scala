@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import graft.Query
 import graft.functions.TextFunctions.{jaccard, minhashBands, minhashSignature, shingles, tokens}
 import graft.queries.Kpis
-import graft.sink.Warehouse
 
 /** The persisted MinHash band store as a first-class OPERATOR (VERDICT
   * r15 #1): q98 drives the store end to end inside one registered query
@@ -44,7 +43,6 @@ import graft.sink.Warehouse
   * streaming twin's batch-split invariance rests on. */
 object BandStore {
 
-  val StoreBuckets: Int = IncrementalDedup.StoreBuckets
   val JaccardMin = 0.5
 
   /** Distinct-3-shingle sets of a (doc_id, text) frame — the stored
@@ -75,97 +73,35 @@ object BandStore {
       .select(col("a"), col("b")).distinct()
   }
 
-  def bandsTable(table: String): String = s"${table}_bands"
-  def shinglesTable(table: String): String = s"${table}_shingles"
+  private val Bands = DocStore.Table("_bands", "bucket_key", bandsOf)
+  private val Shingles = DocStore.Table("_shingles", "doc_id", identity)
+  /** The two bucketed tables over [[shingleSets]]: the bands on the
+    * composed bucket_key, the shingle sets themselves on doc_id. The
+    * bands table's append guard pays one single-column shuffle of the
+    * (8-rows-per-doc) band projection; the shingles side rides its
+    * bucketed doc_id scan. */
+  val Store: DocStore = DocStore(shingleSets, Seq(Bands, Shingles))
 
-  /** (Over)write both halves of the store from a (doc_id, text) corpus:
-    * bands bucketed on bucket_key, shingle sets bucketed on doc_id. */
-  def writeStore(corpus: DataFrame, table: String, path: String,
-                 nBuckets: Int = StoreBuckets): Unit = {
-    val sh = shingleSets(corpus)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the two halves are independent write jobs over the one persisted
-    // shingle frame — overlapped (guide §2.6, r18): each write's 8-task
-    // bucket stage and driver-side commit otherwise idle every core the
-    // other write wants. Concurrent first-materialization of `sh` is
-    // safe (per-block cache locking); results byte-identical.
-    graft.plans.Overlap.two(
-      Warehouse.writeBucketed(bandsOf(sh), bandsTable(table),
-        s"${path}_bands", "bucket_key", nBuckets, mode = "overwrite"),
-      Warehouse.writeBucketed(sh, shinglesTable(table),
-        s"${path}_shingles", "doc_id", nBuckets, mode = "overwrite"))
-    sh.unpersist()
-    ()
-  }
+  def bandsTable(table: String): String = Bands.name(table)
+  def shinglesTable(table: String): String = Shingles.name(table)
 
-  /** Append admitted documents to BOTH halves of the store; `saveAsTable`
-    * append keeps each table's bucket spec, so later probes stay
-    * store-side shuffle-free (q94's append discipline, both keys).
-    * Idempotence is per HALF and per DOCUMENT: the batch is first
-    * deduped on doc_id (an at-least-once flow may deliver the same doc
-    * twice in ONE batch — both copies would pass a store-only guard and
-    * double-count every later probe), then EACH half anti-joins the
-    * batch against its OWN table's doc_ids, so a crash between the two
-    * writes leaves no permanent skew — the retry fills exactly the
-    * missing half instead of re-appending the written one (orphan band
-    * rows would otherwise accrete across failures with retirement as
-    * the only cleanup). The shingles-side guard rides the bucketed
-    * doc_id scan; the bands-side guard pays one single-column shuffle
-    * of the (8-rows-per-doc) band projection — the price of the
-    * crash-consistency guarantee. */
-  def appendToStore(admitted: DataFrame, table: String, path: String,
-                    nBuckets: Int = StoreBuckets): Unit = {
-    val spark = admitted.sparkSession
-    val sh = shingleSets(admitted.dropDuplicates("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val novelBands = sh.join(
-      spark.table(bandsTable(table)).select(col("doc_id")),
-      Seq("doc_id"), "left_anti")
-    val novelSh = sh.join(
-      spark.table(shinglesTable(table)).select(col("doc_id")),
-      Seq("doc_id"), "left_anti")
-    // independent appends to the two halves, overlapped (guide §2.6):
-    // each half still self-guards against ITS OWN table, so the
-    // crash-consistency story is unchanged — a crash now may leave
-    // EITHER half (not just the first) written, and the retry fills
-    // exactly the missing one either way.
-    graft.plans.Overlap.two(
-      Warehouse.writeBucketed(bandsOf(novelBands), bandsTable(table),
-        s"${path}_bands", "bucket_key", nBuckets, mode = "append"),
-      Warehouse.writeBucketed(novelSh, shinglesTable(table),
-        s"${path}_shingles", "doc_id", nBuckets, mode = "append"))
-    sh.unpersist()
-    ()
-  }
+  /** (Over)write both tables from a (doc_id, text) corpus. */
+  def writeStore(corpus: DataFrame, table: String, path: String): Unit =
+    Store.write(corpus, table, path)
 
-  /** Retire documents from BOTH halves of the store — the takedown GC
-    * completing this store's maintenance pair, [[SubstringStore.retireFromStore]]'s
-    * discipline applied to the two-table layout: one doc_id anti-join
-    * per half, each surviving generation rewritten with its OWN
-    * bucketing (bands on bucket_key, shingles on doc_id — the q340
-    * generation-swap rule), so post-GC probes stay exchange-free on
-    * both store sides. A running [[graft.streaming.NearDupProbeStream]]
-    * holds the PRIOR generation (resolved at query start) and is
-    * undisturbed; admitting the new generation is an explicit restart. */
+  /** Append admitted documents to both tables, idempotently per table
+    * and per document ([[DocStore.append]]). */
+  def appendToStore(admitted: DataFrame, table: String, path: String)
+      : Unit = Store.append(admitted, table, path)
+
+  /** Retire documents from both tables into the GC generation — the
+    * takedown GC completing this store's maintenance pair. A running
+    * [[graft.streaming.NearDupProbeStream]] holds the PRIOR generation
+    * (resolved at query start) and is undisturbed; admitting the new
+    * generation is an explicit restart. */
   def retireFromStore(spark: SparkSession, table: String,
-      retired: DataFrame, gcTable: String, gcPath: String,
-      nBuckets: Int = StoreBuckets): Unit = {
-    val r = retired.select(col("doc_id"))
-    // the two GC rewrites read/write disjoint tables — overlapped
-    // (guide §2.6), same jobs, byte-identical generations.
-    graft.plans.Overlap.two(
-      Warehouse.writeBucketed(
-        spark.table(bandsTable(table)).join(r, Seq("doc_id"), "left_anti")
-          .select(col("bucket_key"), col("doc_id")),
-        bandsTable(gcTable), s"${gcPath}_bands", "bucket_key", nBuckets,
-        mode = "overwrite"),
-      Warehouse.writeBucketed(
-        spark.table(shinglesTable(table)).join(r, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("sh")),
-        shinglesTable(gcTable), s"${gcPath}_shingles", "doc_id", nBuckets,
-        mode = "overwrite"))
-    ()
-  }
+      retired: DataFrame, gcTable: String, gcPath: String): Unit =
+    Store.retire(spark, table, retired, gcTable, gcPath)
 
   /** One verdict row per `batch` (doc_id, text) document against the
     * frozen store generation (`bands`, `shingles` — the two bucketed

@@ -6,16 +6,13 @@ import org.apache.spark.sql.functions._
 import graft.Query
 import graft.functions.TextFunctions.{md5Hash60, md5Hash60Sql, tokens}
 import graft.queries.Kpis
-import graft.sink.Warehouse
 
 /** The persisted BOILERPLATE-FINGERPRINT store — the q446 content-defined
   * boilerplate detector's frequency census as a maintained artifact, so a
   * live pipeline can ask "does this arriving document carry template text
-  * already known corpus-wide?" without re-censusing the corpus per batch
-  * (the [[BandStore]] discipline applied to the chunk-frequency store).
+  * already known corpus-wide?" without re-censusing the corpus per batch.
   *
-  * Store layout — TWO bucketed tables (the BandStore two-half pattern,
-  * each half able to self-guard appends by doc_id):
+  * Store layout — TWO bucketed tables with the [[DocStore]] lifecycle:
   *   - `<table>_inc` (fp, doc_id): the distinct INCIDENCE of eligible
   *     (≥ [[CdcMinLen]]-token) CDC chunk fingerprints in admitted docs,
   *     hash-bucketed + sorted on fp — document frequency is
@@ -23,8 +20,7 @@ import graft.sink.Warehouse
   *     probe time (co-located by fp, no exchange). Incidence rather than
   *     a count ledger makes RETIREMENT exact: dropping a document's rows
   *     decrements every df it contributed to, with no tombstone math.
-  *   - `<table>_docs` (doc_id): admitted doc ids, bucketed on doc_id —
-  *     the idempotence guard's fast side.
+  *   - `<table>_docs` (doc_id): admitted doc ids, bucketed on doc_id.
   *
   * Probe shape per batch: CDC-chunk the batch docs (per-row array
   * expressions, zero shuffle), join the batch's DISTINCT fps against the
@@ -35,7 +31,6 @@ import graft.sink.Warehouse
   * streaming twin ([[graft.streaming.BoilerProbeStream]]) rests on. */
 object BoilerStore {
 
-  val StoreBuckets: Int = IncrementalDedup.StoreBuckets
   /** Boilerplate document-frequency threshold (q444/q446's B). */
   val B = 5
   /** CDC breakpoint divisor: a token whose md5-60 hash ≡ 0 (mod 8) ends a
@@ -102,74 +97,33 @@ object BoilerStore {
       .filter(col("cl") >= CdcMinLen)
       .select(col("fp"), col("doc_id")).distinct()
 
-  def incTable(table: String): String = s"${table}_inc"
-  def docsTable(table: String): String = s"${table}_docs"
+  private val Inc = DocStore.Table("_inc", "fp", incidence)
+  private val Docs = DocStore.Table("_docs", "doc_id",
+    _.select(col("doc_id")).distinct())
+  /** The incidence table on fp and the admitted doc ids on doc_id, both
+    * over the (doc_id, text) documents themselves. */
+  val Store: DocStore = DocStore(identity, Seq(Inc, Docs))
 
-  /** (Over)write both halves from a (doc_id, text) corpus. */
-  def writeStore(corpus: DataFrame, table: String, path: String,
-                 nBuckets: Int = StoreBuckets): Unit = {
-    // independent write jobs over disjoint tables — overlapped (guide
-    // §2.6, r18, the BandStore.writeStore discipline)
-    graft.plans.Overlap.two(
-      Warehouse.writeBucketed(incidence(corpus), incTable(table),
-        s"${path}_inc", "fp", nBuckets, mode = "overwrite"),
-      Warehouse.writeBucketed(
-        corpus.select(col("doc_id")).distinct(), docsTable(table),
-        s"${path}_docs", "doc_id", nBuckets, mode = "overwrite"))
-    ()
-  }
+  def incTable(table: String): String = Inc.name(table)
+  def docsTable(table: String): String = Docs.name(table)
 
-  /** Append admitted documents to both halves — the [[BandStore]]
-    * idempotence discipline verbatim: dedup the batch on doc_id, then
-    * EACH half anti-joins the batch against its OWN table's doc_ids, so
-    * at-least-once redelivery cannot inflate any fp's document frequency
-    * and a crash between the two writes is healed by the retry. */
-  def appendToStore(admitted: DataFrame, table: String, path: String,
-                    nBuckets: Int = StoreBuckets): Unit = {
-    val spark = admitted.sparkSession
-    val a = admitted.dropDuplicates("doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val novelInc = incidence(a.join(
-      spark.table(incTable(table)).select(col("doc_id")).distinct(),
-      Seq("doc_id"), "left_anti"))
-    val novelDocs = a.select(col("doc_id")).join(
-      spark.table(docsTable(table)).select(col("doc_id")),
-      Seq("doc_id"), "left_anti")
-    // independent self-guarded appends, overlapped (guide §2.6): each
-    // half anti-joins its OWN table, so the crash-retry contract is
-    // unchanged — either half may land first, the retry fills the gap.
-    graft.plans.Overlap.two(
-      Warehouse.writeBucketed(novelInc, incTable(table),
-        s"${path}_inc", "fp", nBuckets, mode = "append"),
-      Warehouse.writeBucketed(novelDocs, docsTable(table),
-        s"${path}_docs", "doc_id", nBuckets, mode = "append"))
-    a.unpersist()
-    ()
-  }
+  /** (Over)write both tables from a (doc_id, text) corpus. */
+  def writeStore(corpus: DataFrame, table: String, path: String): Unit =
+    Store.write(corpus, table, path)
 
-  /** Retire documents from both halves into a GC generation, each half
-    * rewritten with its OWN bucketing (the q340 generation-swap rule).
-    * Because the store holds INCIDENCE rows, retirement exactly
-    * decrements every df the retired docs contributed — a template whose
-    * hosts all leave the corpus stops being boilerplate, with no
-    * tombstone arithmetic. */
+  /** Append admitted documents to both tables ([[DocStore.append]]):
+    * at-least-once redelivery cannot inflate any fp's document
+    * frequency. */
+  def appendToStore(admitted: DataFrame, table: String, path: String)
+      : Unit = Store.append(admitted, table, path)
+
+  /** Retire documents from both tables into the GC generation. Because
+    * the store holds INCIDENCE rows, retirement exactly decrements every
+    * df the retired docs contributed — a template whose hosts all leave
+    * the corpus stops being boilerplate, with no tombstone arithmetic. */
   def retireFromStore(spark: SparkSession, table: String,
-      retired: DataFrame, gcTable: String, gcPath: String,
-      nBuckets: Int = StoreBuckets): Unit = {
-    val r = retired.select(col("doc_id"))
-    // disjoint-table GC rewrites, overlapped (guide §2.6)
-    graft.plans.Overlap.two(
-      Warehouse.writeBucketed(
-        spark.table(incTable(table)).join(r, Seq("doc_id"), "left_anti")
-          .select(col("fp"), col("doc_id")),
-        incTable(gcTable), s"${gcPath}_inc", "fp", nBuckets,
-        mode = "overwrite"),
-      Warehouse.writeBucketed(
-        spark.table(docsTable(table)).join(r, Seq("doc_id"), "left_anti"),
-        docsTable(gcTable), s"${gcPath}_docs", "doc_id", nBuckets,
-        mode = "overwrite"))
-    ()
-  }
+      retired: DataFrame, gcTable: String, gcPath: String): Unit =
+    Store.retire(spark, table, retired, gcTable, gcPath)
 
   /** One verdict row per `batch` (doc_id, text) document against the
     * frozen incidence generation: (doc_id, n_chunks, n_eligible,

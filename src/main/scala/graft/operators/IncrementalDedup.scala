@@ -32,21 +32,22 @@ import graft.sink.Warehouse
   */
 object IncrementalDedup {
 
+  /** The bucket count of every persisted store: this one, the
+    * [[IncrementalRollup]] store (whose `aggBatch` exchange must match
+    * it) and the [[DocStore]] layouts. */
   val StoreBuckets = 8
 
   /** (Over)write the fingerprint store: one distinct `fp` per admitted
     * document, hash-bucketed + sorted on `fp`. */
-  def writeStore(fps: DataFrame, table: String, path: String,
-                 nBuckets: Int = StoreBuckets): Unit =
+  def writeStore(fps: DataFrame, table: String, path: String): Unit =
     Warehouse.writeBucketed(fps.select("fp").distinct(), table, path,
-      "fp", nBuckets, mode = "overwrite")
+      "fp", StoreBuckets, mode = "overwrite")
 
   /** Append newly admitted fingerprints; `saveAsTable` append keeps the
     * table's bucket spec, so later probes stay shuffle-free. */
-  def appendToStore(fps: DataFrame, table: String, path: String,
-                    nBuckets: Int = StoreBuckets): Unit =
+  def appendToStore(fps: DataFrame, table: String, path: String): Unit =
     Warehouse.writeBucketed(fps.select("fp").distinct(), table, path,
-      "fp", nBuckets, mode = "append")
+      "fp", StoreBuckets, mode = "append")
 
   /** Survivors of `batch` (doc_id, lang, fp) vs the persisted store:
     * LEFT ANTI on `fp` (store side shuffle-free off the bucketed scan),

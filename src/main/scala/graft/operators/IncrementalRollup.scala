@@ -30,15 +30,14 @@ import graft.sink.Warehouse
   */
 object IncrementalRollup {
 
-  val StoreBuckets = 8
+  import IncrementalDedup.StoreBuckets
 
   /** (Over)write the rollup store `(k, cnt, total)`, hash-bucketed +
     * sorted on `k`. At scale this is a partition-overwrite of touched
     * buckets; the fixture driver overwrites the whole (small) table. */
-  def writeStore(agg: DataFrame, table: String, path: String,
-                 nBuckets: Int = StoreBuckets): Unit =
+  def writeStore(agg: DataFrame, table: String, path: String): Unit =
     Warehouse.writeBucketed(agg.select("k", "cnt", "total"), table, path,
-      "k", nBuckets, mode = "overwrite")
+      "k", StoreBuckets, mode = "overwrite")
 
   /** Per-key partial aggregate of a raw batch: `(k, cnt, total)` with
     * the sum in exact decimal. The explicit-count `repartition(n, k)`
@@ -46,11 +45,10 @@ object IncrementalRollup {
     * groupBy reuses that exchange and the downstream merge join needs
     * no ENSURE_REQUIREMENTS re-shuffle — the whole batch path costs
     * exactly one Exchange (spec-asserted), map-side partials intact. */
-  def aggBatch(batch: DataFrame, key: String, value: String,
-               nBuckets: Int = StoreBuckets): DataFrame =
+  def aggBatch(batch: DataFrame, key: String, value: String): DataFrame =
     batch.select(col(key).as("k"),
         col(value).cast("decimal(18,4)").as("v"))
-      .repartition(nBuckets, col("k"))
+      .repartition(StoreBuckets, col("k"))
       .groupBy(col("k"))
       .agg(count(lit(1)).as("cnt"), sum(col("v")).as("total"))
 

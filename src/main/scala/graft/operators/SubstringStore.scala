@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 
 import graft.Query
 import graft.queries.SubstringQueries.{BF, K, L}
-import graft.sink.Warehouse
 
 /** Incremental SUBSTRING dedup against a PERSISTED position store — the
   * append story for the q350 family, completing the maintenance picture
@@ -19,7 +18,7 @@ import graft.sink.Warehouse
   *
   * Store layout follows q94's rule — the probe key owns the bucketing:
   * rows are (fp, doc_id, p) K-shingle POSITIONS, hash-bucketed + sorted
-  * on the md5 `fp` ([[Warehouse.writeBucketed]]), so at probe time the
+  * on the md5 `fp` ([[DocStore]]), so at probe time the
   * store side of the fingerprint join AND the boilerplate-cap count
   * (`groupBy(fp)` rides the same bucketing) are satisfied by the scan
   * itself — the accumulated 100 TB position history never re-shuffles;
@@ -37,8 +36,6 @@ import graft.sink.Warehouse
   */
 object SubstringStore {
 
-  val StoreBuckets = 8
-
   /** Tokenize + K-shingle a (doc_id, text) frame into position rows
     * (fp, doc_id, p) — q350's exact shingling (trim/lower/whitespace
     * tokens, md5 of the space-joined K-slice). */
@@ -54,18 +51,20 @@ object SubstringStore {
       .select(col("fp"), col("doc_id"), col("p"))
   }
 
-  /** (Over)write the position store, bucketed + sorted on `fp`. */
-  def writeStore(docs: DataFrame, table: String, path: String,
-                 nBuckets: Int = StoreBuckets): Unit =
-    Warehouse.writeBucketed(positions(docs), table, path, "fp", nBuckets,
-      mode = "overwrite")
+  /** One table, the positions bucketed on `fp`. */
+  val Store: DocStore =
+    DocStore(identity, Seq(DocStore.Table("", "fp", positions)))
 
-  /** Append admitted documents' positions; append keeps the bucket
-    * spec, so later probes stay store-side shuffle-free. */
-  def appendToStore(docs: DataFrame, table: String, path: String,
-                    nBuckets: Int = StoreBuckets): Unit =
-    Warehouse.writeBucketed(positions(docs), table, path, "fp", nBuckets,
-      mode = "append")
+  /** (Over)write the position store. */
+  def writeStore(docs: DataFrame, table: String, path: String): Unit =
+    Store.write(docs, table, path)
+
+  /** Append admitted documents' positions, once per document
+    * ([[DocStore.append]]): a re-delivered document would otherwise
+    * double its positions, inflating the per-fp count behind the [[BF]]
+    * cap and the run lengths of every later probe. */
+  def appendToStore(docs: DataFrame, table: String, path: String): Unit =
+    Store.append(docs, table, path)
 
   /** One verdict row per batch document vs the persisted store:
     * (doc_id, n_matched_store_docs, longest_span_tokens,
@@ -113,22 +112,13 @@ object SubstringStore {
     * the way q340 completes q98's band store: takedowns (copyright,
     * PII, right-to-be-forgotten — q380's cohort) must remove a
     * document's POSITIONS so future crawls stop being flagged against
-    * retired content, without disturbing any other document's verdicts.
-    * The delete is one doc_id anti-join; the surviving generation is
-    * rewritten with the SAME fp bucketing (q340's generation-swap
-    * discipline — write new table, retire old), so post-GC probes stay
-    * store-side shuffle-free. SubstringGcSpec pins verdict
-    * preservation for unrelated probes and admission for probes whose
-    * only match was retired. */
+    * retired content, without disturbing any other document's verdicts
+    * ([[DocStore.retire]]'s generation swap). SubstringGcSpec pins
+    * verdict preservation for unrelated probes and admission for probes
+    * whose only match was retired. */
   def retireFromStore(spark: SparkSession, table: String,
-      retired: DataFrame, gcTable: String, gcPath: String,
-      nBuckets: Int = StoreBuckets): Unit = {
-    val kept = spark.table(table)
-      .join(retired.select(col("doc_id")), Seq("doc_id"), "left_anti")
-    Warehouse.writeBucketed(
-      kept.select(col("fp"), col("doc_id"), col("p")),
-      gcTable, gcPath, "fp", nBuckets, mode = "overwrite")
-  }
+      retired: DataFrame, gcTable: String, gcPath: String): Unit =
+    Store.retire(spark, table, retired, gcTable, gcPath)
 
   // --------------------------------------------------------------- q358
   /** Registered incremental-substring entry driving the REAL bucketed

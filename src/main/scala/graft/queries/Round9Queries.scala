@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Query
 import graft.functions.TextFunctions._
-import graft.operators.IncrementalDedup
+import graft.operators.{BandStore, IncrementalDedup}
 import graft.sink.Warehouse
 
 /** Round-9 widening: the TPC-H Q18 shape (q95), URL/host normalization
@@ -187,49 +187,35 @@ object Round9Queries {
     * arithmetic end to end. */
   def q98MinhashStoreDedup(spark: SparkSession, dir: String): DataFrame = {
     val par = spark.sparkContext.defaultParallelism
-    // (doc_id, sh) feeds TWO consumers — the store's band/signature build
-    // and the verify-side shingle fetch; persist so the scan + tokenize +
-    // shingle pass runs once (the q42/q48 convention). The repartition
-    // spreads the single-file fixture scan so the 16-permutation
-    // signature pass parallelizes (q22's lesson).
-    val corpusSh = Kpis.table(spark, dir, "documents")
+    // the corpus feeds the store's band build, the incoming crawl and the
+    // verify-side shingle fetch; persist so its scan + shuffle runs once
+    // (the q42/q48 convention). The repartition spreads the single-file
+    // fixture scan so the 16-permutation signature pass parallelizes
+    // (q22's lesson). Shingles and band keys are BandStore's spelling.
+    val corpus = Kpis.table(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
       .repartition(par, col("doc_id"))
-      .select(col("doc_id"), col("text"),
-        shingles(tokens(col("text")), 3).as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def bandsOf(df: DataFrame): DataFrame = df
-      .withColumn("sig", minhashSignature(col("sh"), 16))
-      .select(col("doc_id"), col("sh"),
-        explode(minhashBands(col("sig"), 8, 2)).as("b"))
-      .select(col("doc_id"), col("sh"),
-        col("b.band").as("band"), col("b.band_hash").as("band_hash"))
+    val corpusSh = BandStore.shingleSets(corpus)
     // the persisted store: corpus bands, bucketed on the join key
     val slug = dir.replaceAll("[^A-Za-z0-9]", "_")
     val table = s"graft_q98_bands$slug"
     val path = s"${System.getProperty("java.io.tmpdir")}/graft_q98_bands$slug"
-    Warehouse.writeBucketed(
-      bandsOf(corpusSh).select(
-        concat_ws(":", col("band"), col("band_hash")).as("bucket_key"),
-        col("doc_id")),
+    Warehouse.writeBucketed(BandStore.bandsOf(corpusSh),
       table, path, "bucket_key", IncrementalDedup.StoreBuckets,
       mode = "overwrite")
     // the incoming crawl
-    val near = corpusSh.filter(col("doc_id") % 10 === 0)
+    val near = corpus.filter(col("doc_id") % 10 === 0)
       .select((col("doc_id") + lit(1000000000000L)).as("doc_id"),
         concat(col("text"), lit(" zz extra tail")).as("text"))
-    val novel = corpusSh.filter(col("doc_id") % 7 === 0)
+    val novel = corpus.filter(col("doc_id") % 7 === 0)
       .select((col("doc_id") + lit(2000000000000L)).as("doc_id"),
         concat_ws(" ", transform(tokens(col("text")),
           t => concat(t, lit("_n9")))).as("text"))
-    val batchSh = near.unionAll(novel)
-      .select(col("doc_id"), col("text"),
-        shingles(tokens(col("text")), 3).as("sh"))
+    val batchSh = BandStore.shingleSets(near.unionAll(novel))
     val cand = spark.table(table)
       .withColumnRenamed("doc_id", "a_id")
-      .join(bandsOf(batchSh).select(
-        concat_ws(":", col("band"), col("band_hash")).as("bucket_key"),
-        col("doc_id").as("b_id")),
+      .join(BandStore.bandsOf(batchSh).withColumnRenamed("doc_id", "b_id"),
         Seq("bucket_key"))
     // verify: dedup BARE id pairs first (a pair colliding in several bands
     // must not ship its shingle array once per band — the q26 convention),
@@ -244,7 +230,7 @@ object Round9Queries {
           jaccard(col("a_sh"), col("b_sh")).as("jaccard"))
         .filter(col("jaccard") >= 0.5)
         .orderBy("a_id", "b_id"))
-    corpusSh.unpersist()
+    corpus.unpersist()
     out
   }
 

@@ -22,8 +22,7 @@ class SubstringGcSpec extends AnyFunSuite {
     val store = Seq(
       (10L, words("alpha", 40)),
       (20L, words("beta", 40))).toDF("doc_id", "text")
-    SubstringStore.writeStore(store, "graft_ssgc_store",
-      s"$tmp/store", nBuckets = 2)
+    SubstringStore.writeStore(store, "graft_ssgc_store", s"$tmp/store")
     // probes: each quotes 30 tokens of one store doc inside fresh filler
     val probes = Seq(
       (1L, words("pa", 5) + " " + (3 to 32).map(i => s"alpha$i")
@@ -42,8 +41,7 @@ class SubstringGcSpec extends AnyFunSuite {
       pre(2L).getAs[Long]("best_store_doc") == 20L)
 
     SubstringStore.retireFromStore(spark, "graft_ssgc_store",
-      Seq(10L).toDF("doc_id"), "graft_ssgc_store_g2", s"$tmp/g2",
-      nBuckets = 2)
+      Seq(10L).toDF("doc_id"), "graft_ssgc_store_g2", s"$tmp/g2")
     val post = verdicts("graft_ssgc_store_g2")
     assert(post(1L).getAs[Int]("is_dup") == 0 &&
       post(1L).getAs[Long]("n_matched_store_docs") == 0L,

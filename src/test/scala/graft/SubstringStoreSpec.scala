@@ -73,6 +73,41 @@ class SubstringStoreSpec extends AnyFunSuite {
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
+  test("append is idempotent per document: a re-delivery, or one batch " +
+    "carrying a document twice, changes neither the store nor the verdict") {
+    val base = Files.createTempDirectory("graft-substore-idem")
+    val (t1, t2) = ("substr_store_t4", "substr_store_t5")
+    try {
+      val doc = 200L -> c(1 to 40)
+      val probe = docsDf(300L ->
+        ((1 to 4).map(i => s"p$i").mkString(" ") + " " + c(5 to 28)))
+      def verdict(t: String) =
+        SubstringStore.probeStore(probe, spark.table(t)).head()
+      SubstringStore.writeStore(docsDf(1L -> a(1 to 40)), t1,
+        base.resolve("s1").toString)
+      SubstringStore.appendToStore(docsDf(doc), t1,
+        base.resolve("s1").toString)
+      val rows = spark.table(t1).count()
+      val once = verdict(t1)
+      assert(once.getAs[Int]("is_dup") == 1 &&
+        once.getAs[Long]("longest_span_tokens") == 24L,
+        s"the appended doc must flag with its 24-token span: $once")
+      SubstringStore.appendToStore(docsDf(doc), t1,
+        base.resolve("s1").toString)
+      assert(spark.table(t1).count() == rows,
+        "a re-delivered document must not add position rows")
+      assert(verdict(t1) == once, "a re-delivery must not change the verdict")
+
+      SubstringStore.writeStore(docsDf(1L -> a(1 to 40)), t2,
+        base.resolve("s2").toString)
+      SubstringStore.appendToStore(docsDf(doc, doc), t2,
+        base.resolve("s2").toString)
+      assert(spark.table(t2).count() == rows,
+        "a document twice in one batch must append its positions once")
+      assert(verdict(t2) == once)
+    } finally Seq(t1, t2).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
   test("the bucketed store plans fewer exchanges than plain parquet") {
     val base = Files.createTempDirectory("graft-substore-plan")
     val table = "substr_store_t3"
