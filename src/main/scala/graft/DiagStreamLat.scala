@@ -11,7 +11,7 @@ object DiagStreamLat {
   def main(args: Array[String]): Unit = {
     import org.apache.spark.sql.functions._
     import graft.operators.{BandStore, BoilerStore, IncrementalDedup, SubstringStore}
-    import graft.streaming.{AdmissionStream, ContamStream, CurationGateStream}
+    import graft.streaming.{AdmissionStream, ContamStream, CurationGateStream, VerdictSink}
     import graft.queries.Kpis
     import graft.functions.TextFunctions
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -68,10 +68,7 @@ object DiagStreamLat {
     val fpStore = spark.table(fpT)
 
     def sink(df: org.apache.spark.sql.DataFrame, path: String): Unit =
-      df.withColumn("batch_id", lit(0L))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(path)
+      VerdictSink.write(df, 0L, path)
 
     cycle("neardup_probe")(
       sink(BandStore.probeStore(batch, bands, shingles), s"$tmp/dsl_o1"))

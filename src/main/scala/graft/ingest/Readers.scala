@@ -28,13 +28,10 @@ object Readers {
   def readCsv(spark: SparkSession, path: String): DataFrame =
     normalizeColumns(spark.read.option("header", "true").csv(path))
 
-  /** JSON: array form (`[...]`) as multiLine, else NDJSON — the reference
-    * sniffs the first non-blank line (`processor.py:24-33`). primitives kept
-    * as strings so coercion stays centralized in Clean. */
-  def readJson(spark: SparkSession, path: String): DataFrame =
-    readJson(spark, path, isJsonArray(spark, path))
-
-  /** [[readJson]] for a caller that already sniffed the form. */
+  /** JSON: array form (`[...]`) as multiLine, else NDJSON — the caller
+    * sniffs the form first ([[isJsonArray]]; the reference sniffs the first
+    * non-blank line, `processor.py:24-33`). Primitives kept as strings so
+    * coercion stays centralized in Clean. */
   def readJson(spark: SparkSession, path: String, array: Boolean): DataFrame = {
     val base = spark.read.option("primitivesAsString", "true")
     val df = if (array) base.option("multiLine", "true").json(path)
@@ -56,13 +53,4 @@ object Readers {
     normalizeColumns(
       df.select(df.columns.toIndexedSeq.map(c => col(c).cast("string").as(c)): _*))
   }
-
-  /** Dispatch on detected format (`processor.py:15-41`). */
-  def readAllString(spark: SparkSession, path: String): DataFrame =
-    Detect.forPath(path, spark.sparkContext.hadoopConfiguration) match {
-      case Detect.Csv => readCsv(spark, path)
-      case Detect.Json => readJson(spark, path)
-      case Detect.Parquet => readParquet(spark, path)
-      case other => throw new IllegalArgumentException(s"Unsupported format: $other")
-    }
 }

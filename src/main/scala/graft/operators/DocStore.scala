@@ -23,9 +23,9 @@ import graft.sink.Warehouse
   * anti-joins the batch against its OWN doc_ids. A re-delivered document
   * is a no-op, and a crash that lands one table's append but not the
   * other's leaves no permanent skew: the retry appends exactly the missing
-  * table's rows (DocStoreCrashSpec). A retry must start after both writes
-  * have ended; when the first table fails, [[Overlap.two]] rethrows while
-  * the second table's write may still run (ROADMAP item 4).
+  * table's rows (DocStoreCrashSpec). A retry never overlaps the failed
+  * call's writes: when the first table fails, [[Overlap.two]] cancels the
+  * second table's write and waits for it before rethrowing.
   *
   * Retirement is a generation swap (q340's rule): each table minus the
   * retired doc_ids is written as a NEW table with its own bucketing, so a

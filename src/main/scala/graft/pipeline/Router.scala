@@ -26,8 +26,8 @@ import graft.sink.AuditLog
   * Scale posture: routing is per-FILE control flow — driver-side metadata
   * operations (list, rename, audit rows), never data movement. The data
   * path (read → clean → load) is fully distributed; a 100 TB drop of many
-  * files processes each file as a splittable scan, and `Stream.scala` layers
-  * incremental discovery on top.
+  * files processes each file as a splittable scan, and `Stream.drain` layers
+  * checkpointed discovery on top of the same [[ingestFile]].
   */
 object Router {
 
@@ -52,13 +52,24 @@ object Router {
   }
 
   /** List file keys under `incoming/` (`minio_client.py:45-65`; the
-    * paginated list collapses to one FS call). */
+    * paginated list collapses to one FS call), skipping the names Spark's
+    * file source skips (`HadoopFSUtils.shouldFilterOutPathName`): hidden
+    * `.name` files such as `.name.crc`, `_name` files, and `name._COPYING_`,
+    * the name `hadoop fs -put` writes before its rename. So a half-copied
+    * file waits for its rename, and the batch and streaming drains see the
+    * same files. */
   def listIncoming(spark: SparkSession, bucket: Bucket): Seq[String] = {
     val fs = fsOf(spark, bucket.incoming)
     val p = new Path(bucket.incoming)
     if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).filter(_.isFile).map(_.getPath.getName).toSeq.sorted
+    else fs.listStatus(p).filter(_.isFile).map(_.getPath.getName)
+      .filterNot(skipped).toSeq.sorted
   }
+
+  private def skipped(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) &&
+      !(name.startsWith("_common_metadata") || name.startsWith("_metadata"))
 
   /** ensure_bucket equivalent (`minio_client.py:32-42`). */
   def ensure(spark: SparkSession, bucket: Bucket): Unit = {
@@ -82,56 +93,62 @@ object Router {
       throw new java.io.IOException(s"move failed: $from -> $dst")
   }
 
-  /** Run one batch over everything in `incoming/`, with the intended
-    * validate→route→process→load semantics. `load` is the pluggable
-    * warehouse leg (JDBC upsert in production, parquet/count in tests) and
-    * must return the row count it wrote. */
+  /** Run one batch over everything in `incoming/`, one [[ingestFile]] per
+    * file in name order. */
   def runBatch(spark: SparkSession, bucket: Bucket, audit: AuditLog.Sink,
                load: DataFrame => Long): RunReport = {
     ensure(spark, bucket)
-    val outcomes = listIncoming(spark, bucket).map { name =>
-      val path = s"${bucket.incoming}/$name"
-      Validate.check(spark, path) match {
-        case Left(error) =>
-          audit.log(Schemas.AuditEntry(name, bucket.base, "validation_failed",
-            Some(0L), Some(error)))
-          move(spark, path, bucket.failed("validation_failed"))
-          FileOutcome(name, "validation_failed", 0L, Some(error))
-        case Right(raw) =>
-          audit.log(Schemas.AuditEntry(name, bucket.base, "validated", None, None))
-          // ---- process stage (clean → dedup of the frame validation read),
-          // materialised once: the checkpoint's job also yields the row
-          // count, and the load reads the checkpoint instead of the file.
-          // Retries are Spark task retries; a stage failure → quarantine.
-          val cleanedOrErr =
-            try Right(Eager.ckptCounted(Clean.cleanSales(raw)))
-            catch { case NonFatal(e) => Left(e) }
-          cleanedOrErr match {
-            case Left(e) =>
-              audit.log(Schemas.AuditEntry(name, bucket.base, "processing_failed",
-                Some(0L), Some(String.valueOf(e.getMessage))))
-              move(spark, path, bucket.failed("processing_failed"))
-              FileOutcome(name, "processing_failed", 0L, Some(String.valueOf(e.getMessage)))
-            case Right((cleaned, nRows)) =>
-              audit.log(Schemas.AuditEntry(name, bucket.base, "processed",
-                Some(nRows), None))
-              // ---- load stage
-              try {
-                val loaded = load(cleaned)
-                move(spark, path, bucket.processed)
-                audit.log(Schemas.AuditEntry(name, bucket.base, "loaded",
-                  Some(loaded), None))
-                FileOutcome(name, "loaded", loaded, None)
-              } catch {
-                case NonFatal(e) =>
-                  audit.log(Schemas.AuditEntry(name, bucket.base, "load_failed",
-                    Some(0L), Some(String.valueOf(e.getMessage))))
-                  move(spark, path, bucket.failed("loading_failed"))
-                  FileOutcome(name, "load_failed", 0L, Some(String.valueOf(e.getMessage)))
-              }
-          }
-      }
+    RunReport(listIncoming(spark, bucket).map(ingestFile(spark, bucket, _, audit, load)))
+  }
+
+  /** Ingest one file of `incoming/` with the intended
+    * validate→route→process→load semantics, auditing every stage and moving
+    * the file to `processed/` or `failed/<reason>/`. `load` is the pluggable
+    * warehouse leg (JDBC upsert in production, parquet/count in tests) and
+    * must return the row count it wrote. The batch and the streaming drain
+    * (`Stream.drain`) both ingest through here. */
+  def ingestFile(spark: SparkSession, bucket: Bucket, name: String,
+                 audit: AuditLog.Sink, load: DataFrame => Long): FileOutcome = {
+    val path = s"${bucket.incoming}/$name"
+    Validate.check(spark, path) match {
+      case Left(error) =>
+        audit.log(Schemas.AuditEntry(name, bucket.base, "validation_failed",
+          Some(0L), Some(error)))
+        move(spark, path, bucket.failed("validation_failed"))
+        FileOutcome(name, "validation_failed", 0L, Some(error))
+      case Right(raw) =>
+        audit.log(Schemas.AuditEntry(name, bucket.base, "validated", None, None))
+        // ---- process stage (clean → dedup of the frame validation read),
+        // materialised once: the checkpoint's job also yields the row
+        // count, and the load reads the checkpoint instead of the file.
+        // Retries are Spark task retries; a stage failure → quarantine.
+        val cleanedOrErr =
+          try Right(Eager.ckptCounted(Clean.cleanSales(raw)))
+          catch { case NonFatal(e) => Left(e) }
+        cleanedOrErr match {
+          case Left(e) =>
+            audit.log(Schemas.AuditEntry(name, bucket.base, "processing_failed",
+              Some(0L), Some(String.valueOf(e.getMessage))))
+            move(spark, path, bucket.failed("processing_failed"))
+            FileOutcome(name, "processing_failed", 0L, Some(String.valueOf(e.getMessage)))
+          case Right((cleaned, nRows)) =>
+            audit.log(Schemas.AuditEntry(name, bucket.base, "processed",
+              Some(nRows), None))
+            // ---- load stage
+            try {
+              val loaded = load(cleaned)
+              move(spark, path, bucket.processed)
+              audit.log(Schemas.AuditEntry(name, bucket.base, "loaded",
+                Some(loaded), None))
+              FileOutcome(name, "loaded", loaded, None)
+            } catch {
+              case NonFatal(e) =>
+                audit.log(Schemas.AuditEntry(name, bucket.base, "load_failed",
+                  Some(0L), Some(String.valueOf(e.getMessage))))
+                move(spark, path, bucket.failed("loading_failed"))
+                FileOutcome(name, "load_failed", 0L, Some(String.valueOf(e.getMessage)))
+            }
+        }
     }
-    RunReport(outcomes)
   }
 }

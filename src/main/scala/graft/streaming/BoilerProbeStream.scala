@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.BoilerStore
 
@@ -33,30 +33,10 @@ object BoilerProbeStream {
   /** Start the admission gate: probe each micro-batch of `docs`
     * (doc_id, text) against the frozen incidence generation, writing
     * verdict rows (q450's schema — one per batch document, clean docs
-    * included) as parquet under `outPath`, partitioned by batch_id with
-    * dynamic-partition OVERWRITE so a replayed micro-batch rewrites its
-    * own partition. Replay-dedup across RESTARTS needs stable batch ids
-    * → pass a durable `checkpointLocation` in production (the None
-    * default is for single-run tests only). */
+    * included) through [[VerdictSink]] (replay dedup needs a durable
+    * `checkpointLocation`). */
   def start(docs: DataFrame, inc: DataFrame, outPath: String,
-            checkpointLocation: Option[String] = None): StreamingQuery = {
-    val w = docs.writeStream
-      .outputMode(OutputMode.Append())
-    checkpointLocation.foreach(w.option("checkpointLocation", _))
-    w
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.persist()
-        try {
-          if (!b.isEmpty)
-            BoilerStore.probeStore(b, inc)
-              .withColumn("batch_id",
-                org.apache.spark.sql.functions.lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id")
-              .parquet(outPath)
-        } finally { b.unpersist(); () }
-      }
-      .start()
-  }
+            checkpointLocation: Option[String] = None): StreamingQuery =
+    VerdictSink.start(docs, outPath, checkpointLocation)(
+      BoilerStore.probeStore(_, inc))
 }

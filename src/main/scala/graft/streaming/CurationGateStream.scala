@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Query
 import graft.functions.TextFunctions
@@ -128,32 +128,15 @@ object CurationGateStream {
   }
 
   /** Start the live gate: [[verdicts]] per micro-batch of `docs`
-    * (doc_id, text) against the frozen artifacts, written as parquet
-    * under `outPath` partitioned by batch_id with dynamic-partition
-    * OVERWRITE (the NearDupProbeStream replay-dedup discipline;
-    * cross-restart stability needs the durable `checkpointLocation`). */
+    * (doc_id, text) against the frozen artifacts, written through
+    * [[VerdictSink]] (replay dedup needs a durable `checkpointLocation`). */
   def start(docs: DataFrame, lp: Map[String, Double], floor: Double,
       contamIndex: Map[String, Array[(Long, Int)]], fpStore: DataFrame,
       bands: DataFrame, shingles: DataFrame, outPath: String,
       checkpointLocation: Option[String] = None,
-      nllMax: Double = NllMax): StreamingQuery = {
-    val w = docs.writeStream.outputMode(OutputMode.Append())
-    checkpointLocation.foreach(w.option("checkpointLocation", _))
-    w.foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.persist()
-        try {
-          if (!b.isEmpty)
-            verdicts(b, lp, floor, contamIndex, fpStore, bands, shingles,
-              nllMax)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id")
-              .parquet(outPath)
-        } finally { b.unpersist(); () }
-      }
-      .start()
-  }
+      nllMax: Double = NllMax): StreamingQuery =
+    VerdictSink.start(docs, outPath, checkpointLocation)(
+      verdicts(_, lp, floor, contamIndex, fpStore, bands, shingles, nllMax))
 
   // --------------------------------------------------------------- q437
   /** Registered batch replay of the composed gate — the oracle-checked

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.BandStore
 
@@ -37,39 +37,13 @@ import graft.operators.BandStore
 object NearDupProbeStream {
 
   /** Start the admission gate: probe each micro-batch of `docs`
-    * (doc_id, text) against the frozen store generation, writing
-    * verdict rows (q435's schema — one per batch document, clean docs
-    * included with is_near_dup = 0) as parquet under `outPath`,
-    * partitioned by batch_id with dynamic-partition OVERWRITE so a
-    * replayed micro-batch (at-least-once foreachBatch delivery)
-    * rewrites its own partition instead of appending duplicates —
-    * the output stays a pure function of the delivered doc set even
-    * across sink retries. The replay-dedup guarantee holds ACROSS
-    * RESTARTS only if batch ids are stable, which requires a DURABLE
-    * `checkpointLocation` — without one Spark allocates a temp
-    * checkpoint and batch ids restart at 0, overwriting old partitions
-    * with differently-grouped data. Production callers must pass it;
-    * the default (None) is for single-run tests only. */
+    * (doc_id, text) against the frozen store generation, writing verdict
+    * rows (q435's schema — one per batch document, clean docs included
+    * with is_near_dup = 0) through [[VerdictSink]] (replay dedup needs a
+    * durable `checkpointLocation`). */
   def start(docs: DataFrame, bands: DataFrame, shingles: DataFrame,
             outPath: String,
-            checkpointLocation: Option[String] = None): StreamingQuery = {
-    val w = docs.writeStream
-      .outputMode(OutputMode.Append())
-    checkpointLocation.foreach(w.option("checkpointLocation", _))
-    w
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.persist()
-        try {
-          if (!b.isEmpty)
-            BandStore.probeStore(b, bands, shingles)
-              .withColumn("batch_id",
-                org.apache.spark.sql.functions.lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id")
-              .parquet(outPath)
-        } finally { b.unpersist(); () }
-      }
-      .start()
-  }
+            checkpointLocation: Option[String] = None): StreamingQuery =
+    VerdictSink.start(docs, outPath, checkpointLocation)(
+      BandStore.probeStore(_, bands, shingles))
 }

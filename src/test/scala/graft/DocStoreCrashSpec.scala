@@ -12,15 +12,15 @@ import graft.operators.{BandStore, BoilerStore, DocStore}
 /** Crash-retry contract of the two-table document stores: when one of
   * the two concurrently written tables fails inside its Spark job, the
   * caller gets the job's own exception, the failed table is untouched,
-  * the other table holds its complete write, and running the same step
-  * again leaves both tables — and every probe verdict — exactly as one
-  * clean run does. An append fails through a row function that throws on
-  * one document; a retire fails on a corrupted file of the source table,
-  * restored before the retry. The failing table is the second one, the
-  * side `Overlap.two` runs on its worker thread, so the first table's
-  * write runs to its end; a failing first table interrupts the second
-  * table's write instead, which does not stop it (see CHANGES.md).
-  * Toy rows only. */
+  * the other table holds either its complete write or none of it, and
+  * running the same step again leaves both tables — and every probe
+  * verdict — exactly as one clean run does. An append fails through a row
+  * function that throws on one document; a retire fails on a corrupted
+  * file of the source table, restored before the retry. Either table
+  * fails in turn: the second one, which `Overlap.two` runs on its worker
+  * thread, lets the first table's write run to its end; a failing first
+  * table cancels the second table's write and waits for it before the
+  * exception leaves. Toy rows only. */
 class DocStoreCrashSpec extends AnyFunSuite {
   import SparkTestSession.spark
   import spark.implicits._
@@ -54,47 +54,51 @@ class DocStoreCrashSpec extends AnyFunSuite {
   }
 
   /** Append `batch` and retire `retired` on a store built from `base`,
-    * failing the second table, and compare with one clean run. */
+    * failing each table in turn, and compare with one clean run. */
   private def crashAndRetry(tag: String, store: DocStore, base: DataFrame,
       batch: DataFrame, retired: DataFrame,
       verdicts: String => Map[Long, String]): Unit = {
     val dir = Files.createTempDirectory(s"graft-crash-$tag")
     def path(t: String) = dir.resolve(t).toString
-    val ref = s"crash_${tag}_ref"
-    val (t, gc) = (s"crash_${tag}_t", s"crash_${tag}_gc")
-    val names = Seq(ref, s"crash_${tag}_gcref", t, gc)
+    val (ref, gcRef) = (s"crash_${tag}_ref", s"crash_${tag}_gcref")
+    val failed = Seq(1, 0)
+    val names = Seq(ref, gcRef) ++
+      failed.flatMap(i => Seq(s"crash_${tag}_t$i", s"crash_${tag}_gc$i"))
     try {
       store.write(base, ref, path(ref))
       val pre = contents(store, ref)
       store.append(batch, ref, path(ref))
-      store.retire(spark, ref, retired, s"crash_${tag}_gcref",
-        path(s"crash_${tag}_gcref"))
+      store.retire(spark, ref, retired, gcRef, path(gcRef))
       val clean = contents(store, ref)
-      val cleanGc = contents(store, s"crash_${tag}_gcref")
+      val cleanGc = contents(store, gcRef)
       assert(clean != pre, "the batch must add rows to both tables")
-      assert(verdicts(ref) != verdicts(s"crash_${tag}_gcref"),
-        "the retire must change a verdict")
+      assert(verdicts(ref) != verdicts(gcRef), "the retire must change a verdict")
 
-      store.write(base, t, path(t))
-      val e = intercept[SparkException](
-        failing(store, 1).append(batch, t, path(t)))
-      assert(causes(e).exists(c => String.valueOf(c.getMessage)
-        .contains(Injected)), s"not the injected failure: $e")
-      val mid = contents(store, t)
-      assert(mid(1) == pre(1), "the failed table must be untouched")
-      assert(mid(0) == clean(0), "the other table's append lands")
-      store.append(batch, t, path(t))
-      assert(contents(store, t) == clean,
-        "the retried append must equal one clean append")
-      assert(verdicts(t) == verdicts(ref))
+      for (i <- failed) {
+        val (t, gc, other) = (s"crash_${tag}_t$i", s"crash_${tag}_gc$i", 1 - i)
+        store.write(base, t, path(t))
+        val e = intercept[SparkException](
+          failing(store, i).append(batch, t, path(t)))
+        assert(causes(e).exists(c => String.valueOf(c.getMessage)
+          .contains(Injected)), s"not the injected failure: $e")
+        val mid = contents(store, t)
+        assert(mid(i) == pre(i), s"the failed table $i must be untouched")
+        if (i == 1) assert(mid(other) == clean(other), "the other table's append lands")
+        else assert(mid(other) == pre(other) || mid(other) == clean(other),
+          "the cancelled append of the other table is whole or absent")
+        store.append(batch, t, path(t))
+        assert(contents(store, t) == clean,
+          s"the retried append must equal one clean append (table $i failed)")
+        assert(verdicts(t) == verdicts(ref))
 
-      val src = Paths.get(path(t) + store.tables(1).suffix)
-      intercept[SparkException](corrupted(src)(
-        store.retire(spark, t, retired, gc, path(gc))))
-      store.retire(spark, t, retired, gc, path(gc))
-      assert(contents(store, gc) == cleanGc,
-        "the retried retire must equal one clean retire")
-      assert(verdicts(gc) == verdicts(s"crash_${tag}_gcref"))
+        val src = Paths.get(path(t) + store.tables(i).suffix)
+        intercept[SparkException](corrupted(src)(
+          store.retire(spark, t, retired, gc, path(gc))))
+        store.retire(spark, t, retired, gc, path(gc))
+        assert(contents(store, gc) == cleanGc,
+          s"the retried retire must equal one clean retire (table $i failed)")
+        assert(verdicts(gc) == verdicts(gcRef))
+      }
     } finally
       for (n <- names; tb <- store.tables)
         spark.sql(s"DROP TABLE IF EXISTS ${tb.name(n)}")

@@ -56,8 +56,8 @@ class IngestSpec extends AnyFunSuite {
       """[{"sale_id":"a","quantity":3},{"sale_id":"b","quantity":4}]""")
     val nd = tmpFile("records.ndjson",
       "{\"sale_id\":\"a\",\"quantity\":3}\n{\"sale_id\":\"b\",\"quantity\":4}\n")
-    val dfa = Readers.readJson(spark, arr)
-    val dfn = Readers.readJson(spark, nd)
+    val dfa = Readers.readJson(spark, arr, Readers.isJsonArray(spark, arr))
+    val dfn = Readers.readJson(spark, nd, Readers.isJsonArray(spark, nd))
     assert(dfa.count() == 2 && dfn.count() == 2)
     assert(dfa.schema("quantity").dataType.typeName == "string")
     assert(dfn.schema("quantity").dataType.typeName == "string")
@@ -69,7 +69,7 @@ class IngestSpec extends AnyFunSuite {
     Seq(("s1", "2024-01-02 03:04:05", "CUST-1", "PROD-1", 2, 20.5))
       .toDF("Sale_ID", "sale_date", "customer_id", "product_id", "quantity", "amount")
       .write.parquet(dir.toString)
-    val df = Readers.readAllString(spark, dir.toString)
+    val df = Readers.readParquet(spark, dir.toString)
     assert(df.columns.contains("sale_id"))
     assert(df.schema.fields.forall(_.dataType.typeName == "string"))
     val r = df.head()

@@ -132,35 +132,66 @@ class PipelineSpec extends AnyFunSuite {
   test("streaming drain: checkpoint skips already-processed files across runs") {
     val base = Files.createTempDirectory("graft-stream")
     val incoming = base.resolve("incoming"); Files.createDirectories(incoming)
+    val bucket = Router.Bucket(base.toString)
     val ckpt = base.resolve("ckpt").toString
-    val quarantine = base.resolve("quarantine").toString
-    val loaded = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val audit = new AuditLog.InMemorySink
 
     writeFile(incoming, "first.csv", goodCsv)
-    val r1 = Stream.runAvailableNow(spark, incoming.toString, ckpt, quarantine,
-      df => { loaded += df.count(); () })
-    assert(r1.map(_.rows).sum == 2) // 3 rows, dedup → 2
+    val r1 = Stream.drain(spark, bucket, ckpt, audit, _.count())
+    assert(r1.totalLoaded == 2) // 3 rows, dedup → 2
+    assert(Files.exists(base.resolve("processed/first.csv")))
 
-    // second drain with one NEW file: only the new file's rows process (T4)
+    // second drain: the NEW file loads; the same name dropped again is a
+    // path the checkpoint has seen, so it is skipped and stays put (T4)
+    writeFile(incoming, "first.csv", goodCsv)
     writeFile(incoming, "second.csv",
       "sale_id,sale_date,customer_id,product_id,quantity,amount\n" +
       "n1,2024-05-01 00:00:00,c,p,1,1.0\n")
-    val r2 = Stream.runAvailableNow(spark, incoming.toString, ckpt, quarantine,
-      df => { loaded += df.count(); () })
-    assert(r2.map(_.rows).sum == 1)
+    val r2 = Stream.drain(spark, bucket, ckpt, audit, _.count())
+    assert(r2.outcomes.map(_.key) == Seq("second.csv"))
+    assert(r2.totalLoaded == 1)
+    assert(Files.exists(incoming.resolve("first.csv")))
   }
 
   test("streaming quarantine-on-sink-failure keeps the raw batch replayable") {
     val base = Files.createTempDirectory("graft-stream2")
     val incoming = base.resolve("incoming"); Files.createDirectories(incoming)
     writeFile(incoming, "x.csv", goodCsv)
-    val r = Stream.runAvailableNow(spark, incoming.toString,
-      base.resolve("ckpt").toString, base.resolve("q").toString,
+    val bucket = Router.Bucket(base.toString)
+    val ckpt = base.resolve("ckpt").toString
+    val audit = new AuditLog.InMemorySink
+    val r = Stream.drain(spark, bucket, ckpt, audit,
       _ => throw new RuntimeException("sink down"))
-    assert(r.exists(_.quarantined))
-    // raw all-string rows (3, pre-dedup) landed in quarantine
-    val q = spark.read.parquet(base.resolve("q").toString)
-    assert(q.count() == 3)
+    assert(r.byStatus("load_failed") == Seq("x.csv"))
+    assert(audit.history.map(_.status) == Seq("validated", "processed", "load_failed"))
+    assert(audit.current("x.csv").error.get.contains("sink down"))
+    // the raw file waits in failed/loading_failed/, byte for byte
+    val failed = base.resolve("failed/loading_failed/x.csv")
+    assert(Files.readString(failed) == goodCsv)
+    assert(!Files.exists(incoming.resolve("x.csv")))
+
+    // replay: requeue it under a fresh name, then drain into a working sink
+    val requeued = Stream.requeueQuarantined(spark, failed.toString, incoming.toString)
+    assert(requeued.endsWith("x.retry1.csv"))
+    val again = Stream.drain(spark, bucket, ckpt, audit, _.count())
+    assert(again.outcomes == Seq(Router.FileOutcome("x.retry1.csv", "loaded", 2L, None)))
+  }
+
+  test("streaming drain: a batch replayed after a crash skips the files it already routed") {
+    val base = Files.createTempDirectory("graft-stream4")
+    val incoming = base.resolve("incoming"); Files.createDirectories(incoming)
+    val bucket = Router.Bucket(base.toString)
+    val ckpt = base.resolve("ckpt")
+    val audit = new AuditLog.InMemorySink
+    writeFile(incoming, "a.csv", goodCsv)
+    assert(Stream.drain(spark, bucket, ckpt.toString, audit, _.count()).totalLoaded == 2)
+    // the driver died after routing batch 0 but before committing it
+    Seq("0", ".0.crc").foreach(f => Files.deleteIfExists(ckpt.resolve("commits").resolve(f)))
+    writeFile(incoming, "b.csv", goodCsv)
+    val r = Stream.drain(spark, bucket, ckpt.toString, audit, _.count())
+    assert(r.outcomes == Seq(Router.FileOutcome("b.csv", "loaded", 2L, None)))
+    assert(audit.history.filter(_.file_key == "a.csv").map(_.status) ==
+      Seq("validated", "processed", "loaded"))
   }
 
   test("streaming drain handles NDJSON sources") {
@@ -170,10 +201,10 @@ class PipelineSpec extends AnyFunSuite {
       """{"sale_id":"j1","sale_date":"2024-02-01 00:00:00","customer_id":"c","product_id":"p","quantity":"4","amount":"8.25"}""" + "\n" +
       """{"sale_id":"j2","sale_date":"bad","customer_id":"nan","product_id":"p","quantity":"x","amount":""}""" + "\n")
     val loaded = scala.collection.mutable.ArrayBuffer.empty[Array[org.apache.spark.sql.Row]]
-    val r = Stream.runAvailableNow(spark, incoming.toString,
-      base.resolve("ckpt").toString, base.resolve("q").toString,
-      df => { loaded += df.orderBy("sale_id").collect(); () }, format = "json")
-    assert(r.map(_.rows).sum == 2)
+    val r = Stream.drain(spark, Router.Bucket(base.toString),
+      base.resolve("ckpt").toString, new AuditLog.InMemorySink,
+      df => { loaded += df.orderBy("sale_id").collect(); loaded.last.length.toLong })
+    assert(r.totalLoaded == 2)
     val rows = loaded.flatten
     assert(rows.find(_.getString(0) == "j2").get.getAs[Int]("quantity") == 1)
     assert(rows.find(_.getString(0) == "j2").get.getAs[Double]("amount") == 0.0)
@@ -192,51 +223,13 @@ class PipelineSpec extends AnyFunSuite {
     assert(out.toSeq == Seq(false, false, false, true, true))
   }
 
-  test("quarantine replay: quarantined parquet batches re-process via the parquet stream") {
-    val base = Files.createTempDirectory("graft-replay")
-    val incoming = base.resolve("incoming"); Files.createDirectories(incoming)
-    writeFile(incoming, "x.csv", goodCsv)
-    val quarantine = base.resolve("quarantine").toString
-    // first drain: sink down → raw batch lands in quarantine as parquet
-    Stream.runAvailableNow(spark, incoming.toString,
-      base.resolve("ckpt1").toString, quarantine,
-      _ => throw new RuntimeException("sink down"))
-    // replay: stream the quarantine dir itself (parquet format; the
-    // quarantined files are all-string by construction) into a working sink
-    Files.createDirectories(base.resolve("quarantine")) // ensure exists
-    val loaded = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val r = Stream.runAvailableNow(spark, quarantine,
-      base.resolve("ckpt2").toString, base.resolve("q2").toString,
-      df => { loaded += df.count(); () }, format = "parquet")
-    assert(r.map(_.rows).sum == 2) // 3 raw rows, dedup → 2
-    assert(!r.exists(_.quarantined))
-  }
-
-  test("maxFilesPerTrigger bounds micro-batch size (serial batches, T2)") {
-    val base = Files.createTempDirectory("graft-mft")
-    val incoming = base.resolve("incoming"); Files.createDirectories(incoming)
-    (1 to 3).foreach(i => writeFile(incoming, s"f$i.csv",
-      "sale_id,sale_date,customer_id,product_id,quantity,amount\n" +
-      s"k$i,2024-01-0$i 00:00:00,c,p,1,1.0\n"))
-    val batches = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = Stream.salesFileStream(spark, incoming.toString,
-        maxFilesPerTrigger = Some(1))
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .foreachBatch { (b: DataFrame, _: Long) => batches += b.count(); () }
-      .start()
-    q.awaitTermination()
-    assert(batches.toSeq == Seq(1L, 1L, 1L)) // one file per micro-batch
-  }
-
   test("format sweep stream drains a mixed drop zone exactly once, quarantining corrupt files") {
     import SparkTestSession.spark.implicits._
     val base = Files.createTempDirectory("graft-sweep")
     val incoming = base.resolve("incoming"); Files.createDirectories(incoming)
     val header = "sale_id,sale_date,customer_id,product_id,quantity,amount\n"
     writeFile(incoming, "a.csv", header + "s1,2024-01-02 03:04:05,c,p,1,2.0\n")
-    // ARRAY-form JSON — the single-format json stream cannot parse this
+    // ARRAY-form JSON — a json file source cannot parse it beside NDJSON
     writeFile(incoming, "b.json",
       """[
         |  {"sale_id":"s2","sale_date":"2024-01-03 00:00:00","customer_id":"c","product_id":"p","quantity":"1","amount":"3.0"},
@@ -255,41 +248,42 @@ class PipelineSpec extends AnyFunSuite {
     // a file that cannot be read must quarantine loudly, not wedge the query
     writeFile(incoming, "corrupt.parquet", "this is not parquet")
 
-    val quarantine = base.resolve("quarantine").toString
+    val bucket = Router.Bucket(base.toString)
+    val ckpt = base.resolve("ckpt").toString
+    val audit = new AuditLog.InMemorySink
     val loaded = scala.collection.mutable.ArrayBuffer.empty[String]
-    val results = Stream.runAvailableNowSweep(spark, incoming.toString,
-      base.resolve("ckpt").toString, quarantine,
-      df => { loaded ++= df.select("sale_id").collect().map(_.getString(0)); () })
+    val load = (df: DataFrame) => {
+      val ids = df.select("sale_id").collect().map(_.getString(0))
+      loaded ++= ids; ids.length.toLong
+    }
+    val results = Stream.drain(spark, bucket, ckpt, audit, load)
 
-    assert(results.length == 5)
-    assert(results.count(_.quarantined) == 1)
-    assert(results.find(_.quarantined).get.path.endsWith("corrupt.parquet"))
+    assert(results.outcomes.length == 5)
+    assert(results.byStatus("validation_failed") == Seq("corrupt.parquet"))
+    assert(audit.current("corrupt.parquet").error.get.startsWith("Parquet parse error"))
     assert(loaded.sorted.toSeq == Seq("s1", "s2", "s3", "s4", "s5"))
-    assert(Files.exists(base.resolve("quarantine").resolve("corrupt.parquet")))
+    val quarantined = base.resolve("failed/validation_failed/corrupt.parquet")
+    assert(Files.exists(quarantined))
     assert(!Files.exists(incoming.resolve("corrupt.parquet")))
 
     // exactly-once: a re-run over the same checkpoint re-processes nothing
-    val again = Stream.runAvailableNowSweep(spark, incoming.toString,
-      base.resolve("ckpt").toString, quarantine,
-      df => { loaded ++= df.select("sale_id").collect().map(_.getString(0)); () })
-    assert(again.isEmpty)
+    val again = Stream.drain(spark, bucket, ckpt, audit, load)
+    assert(again.outcomes.isEmpty)
     assert(loaded.length == 5)
 
     // repair + requeue: fixing the file in place under its ORIGINAL name
     // would be skipped forever (checkpoint dedups on path); the requeue
     // helper moves it back under a fresh retry-suffixed name that the
     // checkpoint has never seen, so the next drain picks it up.
-    Files.write(base.resolve("quarantine").resolve("corrupt.parquet"),
-      (header + "s6,2024-01-07 00:00:00,c,p,1,7.0\n").getBytes)
-    val fixedCsv = base.resolve("quarantine").resolve("corrupt.csv")
-    Files.move(base.resolve("quarantine").resolve("corrupt.parquet"), fixedCsv)
+    val fixedCsv = quarantined.resolveSibling("corrupt.csv")
+    Files.write(fixedCsv, (header + "s6,2024-01-07 00:00:00,c,p,1,7.0\n").getBytes)
+    Files.delete(quarantined)
     val requeued = Stream.requeueQuarantined(spark, fixedCsv.toString,
       incoming.toString)
     assert(requeued.endsWith("corrupt.retry1.csv"))
-    val third = Stream.runAvailableNowSweep(spark, incoming.toString,
-      base.resolve("ckpt").toString, quarantine,
-      df => { loaded ++= df.select("sale_id").collect().map(_.getString(0)); () })
-    assert(third.map(_.path) == Seq(requeued) && !third.head.quarantined)
+    val third = Stream.drain(spark, bucket, ckpt, audit, load)
+    assert(third.outcomes == Seq(
+      Router.FileOutcome("corrupt.retry1.csv", "loaded", 1L, None)))
     assert(loaded.sorted.toSeq == Seq("s1", "s2", "s3", "s4", "s5", "s6"))
   }
 

@@ -14,9 +14,9 @@ import graft.pipeline.Router
 import graft.sink.{AuditLog, Upsert}
 
 /** `Router.runBatch` per drop-zone format and on its failure paths: a
-  * truncated file, magic-byte detection, the audited row count, a load
-  * failure followed by a re-drop, and the Spark jobs each valid file
-  * costs before its load. */
+  * truncated file, hidden and in-flight names, magic-byte detection, the
+  * audited row count, a load failure followed by a re-drop, and the Spark
+  * jobs each valid file costs before its load. */
 class RouterSpec extends AnyFunSuite {
   import SparkTestSession.spark
   import spark.implicits._
@@ -87,6 +87,23 @@ class RouterSpec extends AnyFunSuite {
     assert(audit.history.map(_.status) == Seq("validation_failed"))
     assert(files(base.resolve("failed/validation_failed")) == Set("cut.parquet"))
     assert(files(base.resolve("incoming")).isEmpty)
+  }
+
+  test("hidden and in-flight files stay in incoming/ untouched while a sibling CSV loads") {
+    // a hidden file, a half-copied `hadoop fs -put` and an `_`-prefixed
+    // file: the names Spark's file source skips
+    val skipped = Seq(".draft.csv" -> csvRows("d").getBytes,
+      "b.csv._COPYING_" -> csvRows("b").take(40).getBytes,
+      "_c.csv" -> csvRows("c").getBytes)
+    val base = zone(("a.csv" -> csvRows("a").getBytes) +: skipped: _*)
+    val audit = new AuditLog.InMemorySink
+    val report = Router.runBatch(spark, Router.Bucket(base.toString), audit, _.count())
+    assert(report.outcomes.map(o => o.key -> o.status) == Seq("a.csv" -> "loaded"))
+    assert(audit.history.map(_.file_key).toSet == Set("a.csv"))
+    assert(files(base.resolve("incoming")) == skipped.map(_._1).toSet)
+    skipped.foreach { case (n, bytes) =>
+      assert(Files.readAllBytes(base.resolve("incoming").resolve(n)).sameElements(bytes), n)
+    }
   }
 
   test("every format loads, extensionless ones by magic bytes, and the " +
